@@ -538,11 +538,11 @@ object Dedup {
     * keeps.
     *
     * Shape: the winner argmax runs over `(id, rank, cluster)` ONLY —
-    * three narrow columns, one map-side-combinable `max_by` groupBy —
-    * and the corpus joins the winner-id set left-semi, so document
-    * text never shuffles (same discipline as [[exactDedupSurvivors]]'
-    * digest shuffle). `max_by` orders by `struct(rank, -id)`, a total
-    * order (ids unique), so the pick is deterministic on any layout.
+    * three narrow columns, one map-side-combinable groupBy (a rank-1
+    * window for non-bigint ids) — and the corpus joins the winner-id set left-semi, so document text never
+    * shuffles (same discipline as [[exactDedupSurvivors]]' digest
+    * shuffle). The pick orders by (rank desc, id asc), a total order
+    * (ids unique), so it is deterministic on any layout.
     */
   def clusterSurvivors(df: DataFrame, idCol: String, clusters: DataFrame,
       rankCol: String): DataFrame = {
@@ -553,16 +553,21 @@ object Dedup {
     // buffer — HashAggregateExec cannot hold it, so the winner pick
     // SORTED the whole (id, rank, cluster) relation twice (partial +
     // final SortAggregate; the r18 ArgMax lesson). For numeric ranks
-    // the pick is the flat-buffer [[graft.functions.ArgMaxScoreMinId]]
-    // instead: same (max rank, ties → min id) winner — null ranks map
-    // to -Infinity so they lose to any ranked member and an all-null
-    // cluster still keeps its min id, exactly the struct ordering's
-    // null-first behavior — on the codegen'd map-side-combining hash
-    // path. Long ranks fail LOUD past 2^53 (where the double cast
-    // stops being order-preserving); non-numeric ranks keep max_by.
-    val winners = (joined.schema("__rank").dataType match {
+    // over bigint ids the pick is the flat-buffer
+    // [[graft.functions.ArgMaxScoreMinId]] instead: same (max rank,
+    // ties → min id) winner — null ranks map to -Infinity so they lose
+    // to any ranked member and an all-null cluster still keeps its min
+    // id — on the codegen'd map-side-combining hash path. Long ranks
+    // fail LOUD past 2^53 (where the double cast stops being
+    // order-preserving). Other ids (int, string) or non-numeric ranks
+    // take the rank-1 window, which orders any type.
+    val numericRank = joined.schema("__rank").dataType match {
       case ByteType | ShortType | IntegerType | FloatType | DoubleType |
-          LongType =>
+          LongType => true
+      case _ => false
+    }
+    val winners =
+      if (numericRank && joined.schema("id").dataType == LongType) {
         val cast = joined.schema("__rank").dataType match {
           case LongType =>
             when(abs(col("__rank")) > (1L << 53), raise_error(concat(
@@ -576,12 +581,9 @@ object Dedup {
           .agg(graft.functions.ArgMaxFunctions.argmax_min_id(
             coalesce(cast, lit(Double.NegativeInfinity)), col("id")).as("w"))
           .select(col("w.id").as(idCol))
-      case _ =>
-        joined.groupBy("cluster")
-          .agg(max_by(col("id"),
-            struct(col("__rank"), (-col("id")).as("__nid"))).as(idCol))
-          .select(idCol)
-    })
+      } else graft.functions.ArgMaxFunctions
+        .rankOneRows(joined, "cluster", "__rank", "id")
+        .select(col("id").as(idCol))
     df.join(winners, Seq(idCol), "left_semi")
   }
 

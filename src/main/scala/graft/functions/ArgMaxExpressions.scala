@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -116,6 +118,20 @@ case class ArgMaxScoreMinId(score: Expression, id: Expression,
 }
 
 object ArgMaxFunctions {
+
+  /** The rank-1 window [[ArgMaxScoreMinId]] replaces, kept as the
+    * fallback for inputs the flat buffer cannot hold (a non-bigint id,
+    * a non-double score): per `group`, the row first by `score` desc
+    * (nulls last, NaN first) then `id` asc — the same winner, for any
+    * orderable id type.
+    */
+  def rankOneRows(df: DataFrame, group: String, score: String,
+      id: String): DataFrame = {
+    val w = Window.partitionBy(group)
+      .orderBy(df(score).desc_nulls_last, df(id).asc)
+    df.withColumn("__rk", row_number().over(w))
+      .filter(col("__rk") === 1).drop("__rk")
+  }
 
   /** Per group: struct(score, id, p0, p1, ...) of the max-score row,
     * ties to the min id; null when no non-null score was seen.

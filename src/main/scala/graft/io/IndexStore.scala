@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted index artifacts — the build-once/serve-many faces of the
   * admission ladder. Every rung of the streaming/batch ingest gate
@@ -13,7 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `dir` (all plain parquet — any engine can audit them):
   * {{{
-  *   manifest.json                       build parameters + row counts
+  *   manifest.json                       build parameters + row counts;
+  *                                       `id_type` is the id column's
+  *                                       type (e.g. "bigint")
   *   digests/       (digest string)      exact rung (md5 of text)
   *   span_hashes/   (h long)             substring rung (distinct
   *                                       8-word span hashes)
@@ -21,6 +24,16 @@ import org.apache.spark.sql.functions._
   *   band_index/    (id, band, band_hash) fuzzy rung candidate side
   *   nb_weights/    (term, llr_micro)    model rung (micro-unit NB llr)
   * }}}
+  *
+  * Every admission table is read with its schema pinned — fixed types,
+  * and the manifest's `id_type` for the two id-bearing tables — so no
+  * read runs Spark's parquet schema-inference job (one per
+  * `spark.read.parquet` without a schema, even with mergeSchema off).
+  * A manifest without `id_type` (a store built before it was recorded)
+  * falls back to inference for those two tables. The loaded NB/DSIR
+  * weight map is memoized in one slot keyed by the table path plus its
+  * (path, length, mtime) file listing — the [[corpusFingerprint]]
+  * signal — so a rebuild or retrain under the same dir reloads it.
   *
   * Scale notes: each table is exactly the shuffle currency its rung
   * already used (16-byte digests, 8-byte span hashes, banded minhash
@@ -59,11 +72,12 @@ object IndexStore {
     val sets = corpus.select(col(idCol).as("id"),
       graft.functions.TextHashFunctions.shingle_hashes(
         col(textCol), graft.ext.HashDefs.ShingleN).as("hs"))
+    val idType = sets.schema("id").dataType
     sets.write.mode(SaveMode.Overwrite).parquet(s"$dir/$ShingleSetsTable")
     // bands derive from the PERSISTED sets, so the two fuzzy tables
     // can never drift apart across a partial rebuild
-    Dedup.lshBands(Dedup.minhashSignature(
-        spark.read.parquet(s"$dir/$ShingleSetsTable")))
+    Dedup.lshBands(Dedup.minhashSignature(readTable(spark,
+        s"$dir/$ShingleSetsTable", Some(shingleSetsSchema(idType)))))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/$BandIndexTable")
 
     QualityModel.nbTermWeightsMicro(corpus, idCol, textCol)
@@ -72,6 +86,7 @@ object IndexStore {
     writeManifest(spark, dir, Seq(
       "kind" -> "\"admission\"",
       "id_col" -> s""""$idCol"""",
+      "id_type" -> s""""${idType.catalogString}"""",
       "text_col" -> s""""$textCol"""",
       "span_words" -> spanWords.toString,
       "shingle_n" -> graft.ext.HashDefs.ShingleN.toString,
@@ -83,14 +98,51 @@ object IndexStore {
         .map("\"" + _ + "\"").mkString("[", ",", "]")) ++ manifestExtra)
   }
 
+  private val DigestsSchema = StructType(Seq(StructField("digest", StringType)))
+  private val SpanHashesSchema = StructType(Seq(StructField("h", LongType)))
+  private val WeightsSchema = StructType(Seq(
+    StructField("term", StringType), StructField("llr_micro", LongType)))
+  private def shingleSetsSchema(idType: DataType) = StructType(Seq(
+    StructField("id", idType), StructField("hs", ArrayType(LongType))))
+  private def bandIndexSchema(idType: DataType) = StructType(Seq(
+    StructField("id", idType), StructField("band", IntegerType),
+    StructField("band_hash", StringType)))
+
+  /** A parquet table read with `schema` pinned, or by inference when
+    * there is none.
+    */
+  private def readTable(spark: SparkSession, path: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+
+  private val IdTypeField = """"id_type": "([^"]+)"""".r
+
+  /** The id column's type as the manifest records it; None for a store
+    * whose manifest predates the field (or has no manifest).
+    */
+  private def storeIdType(spark: SparkSession, dir: String): Option[DataType] =
+    readManifestIfAny(spark, dir)
+      .flatMap(m => IdTypeField.findFirstMatchIn(m))
+      .map(m => DataType.fromDDL(m.group(1)))
+
   def readDigests(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/$DigestsTable")
+    readTable(spark, s"$dir/$DigestsTable", Some(DigestsSchema))
   def readSpanHashes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/$SpanHashesTable")
+    readTable(spark, s"$dir/$SpanHashesTable", Some(SpanHashesSchema))
   def readShingleSets(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/$ShingleSetsTable")
+    readTable(spark, s"$dir/$ShingleSetsTable",
+      storeIdType(spark, dir).map(shingleSetsSchema))
   def readBandIndex(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/$BandIndexTable")
+    readTable(spark, s"$dir/$BandIndexTable",
+      storeIdType(spark, dir).map(bandIndexSchema))
+
+  private def readAdmissionTable(spark: SparkSession, dir: String,
+      table: String): DataFrame = table match {
+    case DigestsTable => readDigests(spark, dir)
+    case SpanHashesTable => readSpanHashes(spark, dir)
+    case ShingleSetsTable => readShingleSets(spark, dir)
+    case BandIndexTable => readBandIndex(spark, dir)
+  }
 
   /** The model rung's ship-to-executors artifact, loaded from the
     * persisted weight table (same fail-loud cap discipline as
@@ -106,17 +158,41 @@ object IndexStore {
     * (never limit(n+1) — the AQE replan hazard
     * [[graft.ext.QualityModel.nbWeightsMicro]] documents) with the
     * fail-loud vocab cap in ONE place.
+    *
+    * The last map loaded is memoized: a slice loop admits every slice
+    * against the same frozen table, which appends never touch, and
+    * reloading it cost three Spark jobs per slice. The key is the path
+    * plus the table's file listing ([[corpusFingerprint]]), so a
+    * rebuild or retrain under the same path reloads; the vocab cap is
+    * checked on every call, hit or miss.
     */
   private def readWeightTable(spark: SparkSession, path: String,
       label: String, maxVocab: Int): Map[String, Long] = {
-    val rows = spark.read.parquet(path)
-    val n = rows.count()
+    val key = s"$path|${corpusFingerprint(spark, path)}"
+    weightMemo.get() match {
+      case WeightMemo(`key`, n, weights) =>
+        checkVocab(label, n, maxVocab)
+        weights
+      case _ =>
+        val rows = readTable(spark, path, Some(WeightsSchema))
+        val n = rows.count()
+        checkVocab(label, n, maxVocab)
+        val weights = rows.collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        weightMemo.set(WeightMemo(key, n, weights))
+        weights
+    }
+  }
+
+  private final case class WeightMemo(key: String, rows: Long,
+      weights: Map[String, Long])
+  private val weightMemo =
+    new java.util.concurrent.atomic.AtomicReference[WeightMemo]()
+
+  private def checkVocab(label: String, n: Long, maxVocab: Int): Unit =
     require(n <= maxVocab,
       s"$label: persisted vocabulary has $n terms > " +
         s"maxVocab=$maxVocab — prune the tail or use a broadcast-join scorer")
-    rows.select("term", "llr_micro").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
 
   /** Full four-rung admission of `fresh` against the PERSISTED
     * indexes: exact (digest anti-join) ∖ substring (span semi-join) ∖
@@ -199,7 +275,8 @@ object IndexStore {
     */
   def compactAdmissionIndexes(spark: SparkSession, dir: String): Unit =
     swapRewrite(spark, dir,
-      Seq(DigestsTable, SpanHashesTable, ShingleSetsTable, BandIndexTable)) {
+      Seq(DigestsTable, SpanHashesTable, ShingleSetsTable, BandIndexTable),
+      read = Some(readAdmissionTable(spark, dir, _))) {
       (df, out) => df.distinct().write.mode(SaveMode.Overwrite).parquet(out)
     }
 
@@ -222,7 +299,8 @@ object IndexStore {
     // against a typo'd/unbuilt dir would record a takedown as done
     val del = ids.select(col(ids.columns.head).as("id")).localCheckpoint()
     swapRewrite(ids.sparkSession, dir, Seq(ShingleSetsTable, BandIndexTable),
-        mustExist = true) {
+        mustExist = true,
+        read = Some(readAdmissionTable(ids.sparkSession, dir, _))) {
       (df, out) => df.join(del, Seq("id"), "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(out)
     }
@@ -236,10 +314,12 @@ object IndexStore {
     * `mustExist` picks the missing-table semantics: skipping is right
     * for compaction (nothing to compact), fail-loud is right for a
     * delete (a takedown against an absent table is an operator error,
-    * not a no-op).
+    * not a no-op). `read` loads a table by name (default: by schema
+    * inference; the admission store pins its schemas).
     */
   private def swapRewrite(spark: SparkSession, dir: String,
-      tables: Seq[String], mustExist: Boolean = false)(
+      tables: Seq[String], mustExist: Boolean = false,
+      read: Option[String => DataFrame] = None)(
       write: (DataFrame, String) => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.foreach { t =>
@@ -247,7 +327,7 @@ object IndexStore {
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/.compact_$t")
       val fs = cur.getFileSystem(conf)
       if (fs.exists(cur)) {
-        write(spark.read.parquet(cur.toString), tmp.toString)
+        write(read.fold(spark.read.parquet(cur.toString))(_(t)), tmp.toString)
         require(fs.delete(cur, true), s"compact: could not delete $cur")
         require(fs.rename(tmp, cur), s"compact: could not swap in $tmp")
       } else require(!mustExist,
@@ -353,12 +433,22 @@ object IndexStore {
   private val FingerprintField = """"corpus_fingerprint": "([0-9a-f]+|absent)"""".r
 
   private def readManifest(spark: SparkSession, indexDir: String): String = {
+    val manifest = readManifestIfAny(spark, indexDir)
+    require(manifest.isDefined, s"no manifest under $indexDir")
+    manifest.get
+  }
+
+  private def readManifestIfAny(spark: SparkSession,
+      indexDir: String): Option[String] = {
     val path = new org.apache.hadoop.fs.Path(s"$indexDir/manifest.json")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"no manifest under $indexDir")
-    val in = fs.open(path)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
+    if (!fs.exists(path)) None
+    else {
+      val in = fs.open(path)
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
   }
 
   /** Serve-side freshness check for a store that was built OUTSIDE

@@ -117,17 +117,26 @@ object EntityResolution {
   /** Resolve matches to one winner per left id: highest sim, ties to
     * the smallest right id. Input shape = [[fuzzyJoin]] output.
     */
-  def bestMatches(matches: DataFrame): DataFrame =
+  def bestMatches(matches: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     // one map-side-combinable argmax, not a rank-1 window (the
     // [[graft.functions.ArgMaxScoreMinId]] rewrite): the window form
     // shuffled and sorted the whole match set per left id; the
     // aggregate ships one candidate per (map task, left id). Same
     // winner — max sim, ties to min right id; sim is non-null by
     // construction (fuzzyJoin thresholds on it), which is what makes
-    // the argmax's null-skipping equivalent to the window.
-    matches.groupBy("id_l")
-      .agg(graft.functions.ArgMaxFunctions.argmax_min_id(
-        col("sim"), col("id_r")).as("__b"))
-      .select(col("id_l"), col("__b.id").as("id_r"),
-        col("__b.score").as("sim"))
+    // the argmax's null-skipping equivalent to the window. The argmax
+    // holds bigint ids and double sims only; other types keep the
+    // window.
+    if (matches.schema("id_r").dataType == LongType &&
+        matches.schema("sim").dataType == DoubleType)
+      matches.groupBy("id_l")
+        .agg(graft.functions.ArgMaxFunctions.argmax_min_id(
+          col("sim"), col("id_r")).as("__b"))
+        .select(col("id_l"), col("__b.id").as("id_r"),
+          col("__b.score").as("sim"))
+    else graft.functions.ArgMaxFunctions
+      .rankOneRows(matches, "id_l", "sim", "id_r")
+      .select("id_l", "id_r", "sim")
+  }
 }

@@ -733,6 +733,28 @@ class DedupSpec extends SparkSpec {
     kept2 shouldBe kept
   }
 
+  test("clusterSurvivors: int and string ids pick the same survivors as " +
+      "bigint ids") {
+    import spark.implicits._
+    val docs = Seq[(Long, Option[Long])](
+      (1L, Some(10L)), (2L, Some(20L)), // rank decides
+      (3L, Some(7L)), (4L, Some(7L)),   // tie → min id
+      (5L, None), (6L, Some(3L)),       // a null rank loses
+      (7L, None), (8L, None))           // all-null → min id
+      .toDF("doc_id", "n_chars")
+    val clusters = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (5L, 5L),
+      (6L, 5L), (7L, 7L), (8L, 7L)).toDF("id", "cluster")
+    for (t <- Seq("bigint", "int", "string")) withClue(t) {
+      def typed(df: org.apache.spark.sql.DataFrame, c: String) =
+        df.withColumn(c, col(c).cast(t))
+      val kept = Dedup.clusterSurvivors(typed(docs, "doc_id"), "doc_id",
+        typed(clusters, "id"), "n_chars")
+      kept.schema("doc_id").dataType.catalogString shouldBe t
+      kept.select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+        .sorted.toSeq shouldBe Seq(2L, 3L, 6L, 7L)
+    }
+  }
+
   test("sourceOverlapMatrix: union property; identical/subset/disjoint exact") {
     import spark.implicits._
     val a = "the quick brown fox jumps over the lazy dog and runs far away"

@@ -1,6 +1,7 @@
 package graft.io
 
 import graft.SparkSpec
+import org.apache.spark.JobLog
 import org.apache.spark.sql.functions._
 
 class IndexStoreSpec extends SparkSpec {
@@ -1074,5 +1075,140 @@ class IndexStoreSpec extends SparkSpec {
     d2 shouldBe d1
     java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(d1, "manifest.json")) shouldBe t1
+  }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def rmDirs(dirs: String*): Unit = dirs.foreach(d =>
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+
+  test("admission serve path runs no schema-inference job and loads the " +
+      "weight map once per store") {
+    val dir = tmpDir("idxjobs")
+    IndexStore.writeAdmissionIndexes(seen, dir)
+    val sc = spark.sparkContext
+    val fresh = slice // its own source read infers, outside the logs
+    // the log sees inference: it is the one job here outside any SQL
+    // execution
+    JobLog(sc)(spark.read.parquet(s"$dir/${IndexStore.DigestsTable}"))._2
+      .map(_.sqlExecution) shouldBe Seq(false)
+
+    // building the frame, before its action: the fuzzy rung's size
+    // probe and checkpoint are the only jobs a warm call runs
+    val (_, fuzzy) = JobLog(sc)(graft.ext.Dedup.minhashCrossPairsFromIndex(
+      IndexStore.readBandIndex(spark, dir), IndexStore.readShingleSets(spark, dir),
+      fresh, "doc_id", "text"))
+    val (first, cold) = JobLog(sc)(IndexStore.admitFromIndexes(fresh, spark, dir))
+    val (second, warm) = JobLog(sc)(IndexStore.admitFromIndexes(fresh, spark, dir))
+    (fuzzy ++ cold ++ warm).filterNot(_.sqlExecution) shouldBe empty
+    warm shouldBe fuzzy
+    // the cold call also loads the weights: count (map stage + result)
+    // and collect
+    cold.size - warm.size should be >= 3
+    val admitted = rowSet(first)
+    admitted should not be empty
+    rowSet(second) shouldBe admitted
+
+    // compaction: one distinct-rewrite per table, no inference
+    IndexStore.appendAdmissionIndexes(fresh, dir)
+    val (_, compact) = JobLog(sc)(IndexStore.compactAdmissionIndexes(spark, dir))
+    compact should not be empty
+    compact.filterNot(_.sqlExecution) shouldBe empty
+    // the compacted store still rejects everything it was appended
+    rowSet(IndexStore.admitFromIndexes(fresh, spark, dir)) shouldBe empty
+    rmDirs(dir)
+  }
+
+  test("weight-map memo: a rebuild under the same dir reloads; the vocab " +
+      "cap fails loud on a memo hit") {
+    val sc = spark.sparkContext
+    def capOnHit(read: Int => Map[String, Long]): Unit = {
+      val n = read(1 << 20).size
+      val (r, jobs) = JobLog(sc)(scala.util.Try(read(n - 1)))
+      jobs shouldBe empty // served from the memo
+      r.failed.get shouldBe an[IllegalArgumentException]
+      r.failed.get.getMessage should include(s"maxVocab=${n - 1}")
+      read(n).size shouldBe n
+    }
+
+    val nbDir = tmpDir("idxmemo")
+    val other = docs.filter(bucket >= 500)
+    IndexStore.writeAdmissionIndexes(seen, nbDir)
+    val a = IndexStore.readNbWeightsMicro(spark, nbDir)
+    a shouldBe graft.ext.QualityModel.nbWeightsMicro(seen, "doc_id", "text")
+    IndexStore.writeAdmissionIndexes(other, nbDir)
+    val b = IndexStore.readNbWeightsMicro(spark, nbDir)
+    b shouldBe graft.ext.QualityModel.nbWeightsMicro(other, "doc_id", "text")
+    b should not be a
+    capOnHit(IndexStore.readNbWeightsMicro(spark, nbDir, _))
+
+    // the DSIR loader shares the memo
+    val dsirDir = tmpDir("idxmemodsir")
+    def dsir(target: org.apache.spark.sql.Column): Map[String, Long] = {
+      val t = docs.filter(target)
+      IndexStore.writeDsirWeights(docs.filter(!target), t, dsirDir)
+      val got = IndexStore.readDsirWeightsMicro(spark, dsirDir)
+      got shouldBe graft.ext.TrainingData.importanceWeightsMicro(
+          docs.filter(!target), t, "text").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      got
+    }
+    val d1 = dsir(col("source").isin("src0", "src1"))
+    dsir(col("source").isin("src2")) should not be d1
+    capOnHit(IndexStore.readDsirWeightsMicro(spark, dsirDir, _))
+    rmDirs(nbDir, dsirDir)
+  }
+
+  test("a manifest without id_type still serves the same admitted set " +
+      "(inferred schema)") {
+    val dir = tmpDir("idxnoidtype")
+    IndexStore.writeAdmissionIndexes(seen, dir)
+    val want = rowSet(IndexStore.admitFromIndexes(slice, spark, dir))
+    val manifest = java.nio.file.Paths.get(dir, "manifest.json")
+    val text = new String(java.nio.file.Files.readAllBytes(manifest), "UTF-8")
+    text should include(""""id_type": "bigint"""")
+    java.nio.file.Files.write(manifest,
+      text.replaceAll("""\s*"id_type": "[^"]*",""", "").getBytes("UTF-8"))
+    // the local FS checksums what it wrote; drop the stale checksum
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, ".manifest.json.crc"))
+    val fresh = slice
+    val (got, jobs) = JobLog(spark.sparkContext)(
+      IndexStore.admitFromIndexes(fresh, spark, dir))
+    // shingle_sets and band_index fall back to inference
+    jobs.count(!_.sqlExecution) shouldBe 2
+    rowSet(got) shouldBe want
+    rmDirs(dir)
+  }
+
+  test("int and string ids round-trip through the pinned shingle_sets / " +
+      "band_index schemas and admit the same set as bigint ids") {
+    val want = {
+      val dir = tmpDir("idxlong")
+      IndexStore.writeAdmissionIndexes(seen, dir)
+      val r = IndexStore.admitFromIndexes(slice, spark, dir)
+        .collect().map(_.getLong(0).toString).toSet
+      rmDirs(dir)
+      r
+    }
+    want should not be empty
+    for (t <- Seq("int", "string")) withClue(t) {
+      val dir = tmpDir(s"idx$t")
+      def typed(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("doc_id").cast(t).as("doc_id"), col("text"))
+      IndexStore.writeAdmissionIndexes(typed(seen), dir)
+      val sets = IndexStore.readShingleSets(spark, dir)
+      val bands = IndexStore.readBandIndex(spark, dir)
+      sets.schema("id").dataType.catalogString shouldBe t
+      bands.schema("id").dataType.catalogString shouldBe t
+      val inPlanSets = typed(seen).select(col("doc_id").as("id"),
+        graft.functions.TextHashFunctions.shingle_hashes(
+          col("text"), graft.ext.HashDefs.ShingleN).as("hs"))
+      rowSet(sets) shouldBe rowSet(inPlanSets)
+      rowSet(bands) shouldBe rowSet(graft.ext.Dedup.lshBands(
+        graft.ext.Dedup.minhashSignature(inPlanSets)))
+      IndexStore.admitFromIndexes(typed(slice), spark, dir)
+        .collect().map(_.get(0).toString).toSet shouldBe want
+      rmDirs(dir)
+    }
   }
 }

@@ -85,6 +85,18 @@ class EntityResolutionSpec extends SparkSpec {
       Seq(1L, 11L, 0.99), Seq(2L, 20L, 0.9)) // tie at 0.9 -> smaller id_r
   }
 
+  test("bestMatches: int and string right ids keep the winner rule") {
+    val m = Seq((1L, 10L, 0.95), (1L, 11L, 0.99), (2L, 20L, 0.9),
+      (2L, 21L, 0.9)).toDF("id_l", "id_r", "sim")
+    for (t <- Seq("int", "string")) withClue(t) {
+      val best = EntityResolution.bestMatches(
+        m.withColumn("id_r", col("id_r").cast(t)))
+      best.schema("id_r").dataType.catalogString shouldBe t
+      rowSet(best.select(col("id_l"), col("id_r").cast("long"), col("sim"))) shouldBe
+        Set(Seq(1L, 11L, 0.99), Seq(2L, 20L, 0.9))
+    }
+  }
+
   test("tokenSignatureBlocker: sorted initials, order/typo invariant") {
     val df = Seq("delta alpha charlie bravo", "alpha bravo charlie delta",
       "aXXXX bYYYY cZZZZ dWWWW", "echo foxtrot").toDF("k")
