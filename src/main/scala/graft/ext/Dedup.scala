@@ -633,7 +633,8 @@ object Dedup {
     * [[bloomProbe]] is a scalar subquery that Spark plans PER
     * REFERENCING BRANCH — subquery reuse does NOT reliably dedup them
     * (measured: the admission split planned 4 independent
-    * bloom_filter_agg builds, DevAdmit + SCALE.md §Bloom), so a
+    * bloom_filter_agg builds, SCALE.md §Bloom; PlanGuardSpec's
+    * q_admit_slice plan check pins the pre-built probe), so a
     * caller splitting one slice both ways pays duplicate full corpus
     * scans. Build ONE [[bloomProbeEager]] probe and hand it to both
     * complement filters instead (the q_admit_slice shape).
@@ -824,25 +825,16 @@ object Dedup {
     * planes; candidates come from a (band, band_hash) equi-join with
     * the NEW side broadcast (a day's slice ≪ the corpus), and each
     * candidate is verified with the exact shingle Jaccard. The corpus
-    * never self-joins and never shuffles — its band index streams
-    * against the broadcast slice. Ids present in both frames are not
-    * matched to themselves. Anti-join `new_id`s away to admit only
-    * novel documents.
-    *
-    * The broadcasts are forced but GUARDED: one narrow agg over the
-    * SLICE (rows + text bytes — never touches the corpus) prices the
-    * slice's shingle sets first, and a slice estimated over
-    * [[HashDefs.CrossBroadcastMaxBytes]] falls back to plain shuffle
-    * joins (degraded — the corpus band index shuffles once — instead
-    * of a driver OOM). On the broadcast path the slice's sets are
-    * eagerly localCheckpoint'ed: bands and verify both consume them,
-    * the guard just proved they're small, and the blocks are
-    * GC-reclaimed (no pinned cache to leak across a slice loop). The
-    * corpus side is consumed twice too
-    * (band index + verify join) and is deliberately NOT cached here —
-    * at corpus scale the cache cannot hold it; a caller iterating
-    * many slices against one corpus should checkpoint/cache `corpus`
-    * (or its parquet) on its own lifecycle.
+    * never self-joins and every hash table is built from the slice or
+    * from its candidate pairs: the corpus band index and shingle sets
+    * stream against them. Ids present in both frames are not matched
+    * to themselves. Anti-join `new_id`s away to admit only novel
+    * documents. Plan shape and guards: [[minhashCrossPairsFromIndex]].
+    * The corpus side is consumed twice (band index + verify join) and
+    * is deliberately NOT cached here — at corpus scale the cache
+    * cannot hold it; a caller iterating many slices against one
+    * corpus should checkpoint/cache `corpus` (or its parquet) on its
+    * own lifecycle.
     */
   def minhashCrossPairs(corpus: DataFrame, fresh: DataFrame,
       idCol: String, textCol: String,
@@ -855,54 +847,119 @@ object Dedup {
       fresh, idCol, textCol, minJaccard, maxBroadcastBytes)
   }
 
+  /** `hashed(fresh)` eagerly localCheckpoint'ed, with the slice's
+    * estimated shingle-set payload observed on that same job — no
+    * probe job of its own. ≤1 shingle hash (8 B) per character is a
+    * safe over-estimate, and 64 B/row covers id + array headers; the
+    * caller prices it against its broadcast guard.
+    *
+    * The checkpoint is taken whatever the size, since the size is
+    * only known once it ran: an over-guard slice is materialized in
+    * full too. That is the cheaper side of the trade — localCheckpoint
+    * blocks are MEMORY_AND_DISK on the executors (they spill, the
+    * driver never holds them) and ContextCleaner-reclaimed when the
+    * plan is GC'd, while the alternative re-hashes the slice once per
+    * consumer (bands, verify, and the admission rungs).
+    */
+  private[graft] def checkpointPriced(fresh: DataFrame, textCol: String)(
+      hashed: DataFrame => DataFrame): (DataFrame, Long) = {
+    val priced = org.apache.spark.sql.Observation()
+    val frame = hashed(fresh.observe(priced, count(lit(1)).as("n"),
+        coalesce(sum(length(col(textCol)).cast("long")), lit(0L)).as("chars")))
+      .localCheckpoint(true)
+    val st = priced.get
+    (frame, st("chars").asInstanceOf[Long] * 8L + st("n").asInstanceOf[Long] * 64L)
+  }
+
+  /** Priced payload of one candidate-pair row (two ids plus its
+    * hash-table entry) when deciding whether the pairs broadcast.
+    */
+  private val CandidateRowBytes = 64L
+
   /** [[minhashCrossPairs]] fed by a PREBUILT corpus index — the
     * build-once/serve-many face: `corpusBands` (id, band, band_hash)
     * and `corpusSets` (id, hs) come from
     * [[graft.io.IndexStore.writeAdmissionIndexes]]'s parquet tables
     * (or any equivalent), so admitting a slice costs zero corpus
     * hashing/banding — the slice bands row-locally and equi-joins the
-    * stored index. Plan shape is identical to [[minhashCrossPairs]]
-    * (which delegates here with freshly-built corpus frames).
+    * stored index. Returns distinct (new_id, corpus_id, jaccard).
+    *
+    * Plan shape: the slice is hashed once into a checkpoint priced on
+    * that job ([[checkpointPriced]]); [[crossPairsFromSets]] does the
+    * rest. The broadcasts are forced but GUARDED: a slice estimated
+    * over `maxBroadcastBytes` ([[HashDefs.CrossBroadcastMaxBytes]])
+    * falls back to plain joins (degraded — the corpus band index
+    * shuffles once — instead of a driver OOM).
     */
   def minhashCrossPairsFromIndex(corpusBands: DataFrame, corpusSets: DataFrame,
       fresh: DataFrame, idCol: String, textCol: String,
       minJaccard: Double = 0.5,
       maxBroadcastBytes: Long = CrossBroadcastMaxBytes): DataFrame = {
-    def sets(df: DataFrame) = df.select(col(idCol).as("id"),
-      graft.functions.TextHashFunctions.shingle_hashes(col(textCol), ShingleN)
-        .as("hs"))
-    val cSets = corpusSets
-    val st = fresh.agg(count(lit(1)).as("n"),
-      coalesce(sum(length(col(textCol)).cast("long")), lit(0L)).as("chars"))
-      .head()
-    // ≤1 shingle hash (8 B) per character is a safe over-estimate of
-    // the set payload; 64 B/row covers id + array headers.
-    val estBytes = st.getLong(1) * 8L + st.getLong(0) * 64L
-    val small = estBytes <= maxBroadcastBytes
-    // eager localCheckpoint, not cache(): same reuse (bands + verify
-    // both read the materialized blocks, the size guard just proved
-    // they fit), but the blocks are ContextCleaner-reclaimed when the
-    // plan is GC'd — a slice loop never accumulates pinned storage
-    val nSets = if (small) sets(fresh).localCheckpoint(true) else sets(fresh)
+    val (nSets, estBytes) = checkpointPriced(fresh, textCol)(
+      _.select(col(idCol).as("id"),
+        graft.functions.TextHashFunctions.shingle_hashes(col(textCol), ShingleN)
+          .as("hs")))
+    crossPairsFromSets(corpusBands, corpusSets, nSets,
+        estBytes <= maxBroadcastBytes, minJaccard, maxBroadcastBytes)._1
+      .distinct()
+  }
+
+  /** The cross-set candidate join and exact verify over a slice's
+    * materialized shingle sets `nSets` (id, hs) — the one
+    * implementation behind [[minhashCrossPairsFromIndex]] and
+    * [[graft.io.IndexStore.admitFromIndexes]]. Every corpus frame is
+    * the STREAMED side:
+    *  - `corpusBands` streams against the slice's bands (broadcast
+    *    when `small`, the caller's verdict on the slice's size);
+    *    `c.id =!= n.id` keeps an id from matching itself;
+    *  - the candidate pairs (corpus_id, new_id) are eagerly
+    *    localCheckpoint'ed with their row count observed on that job,
+    *    and broadcast only when that count, priced at
+    *    [[CandidateRowBytes]] a row, fits `maxBroadcastBytes` — their
+    *    size grows with the corpus's fan-out (boilerplate text whose
+    *    bands collide with many stored documents), which no slice
+    *    estimate bounds;
+    *  - `corpusSets` streams against the candidates, then joins the
+    *    slice's sets (broadcast when `small`) for the verify.
+    * Pairs come back once per colliding band (no `distinct` shuffle:
+    * an anti-join consumer is set-semantic; a pair consumer distincts
+    * them). The Boolean says whether the candidates fit the guard,
+    * so a caller knows a frame of verified pairs is bounded by it.
+    */
+  private[graft] def crossPairsFromSets(corpusBands: DataFrame,
+      corpusSets: DataFrame, nSets: DataFrame, small: Boolean,
+      minJaccard: Double, maxBroadcastBytes: Long): (DataFrame, Boolean) = {
     def sized(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val counted = org.apache.spark.sql.Observation()
     val cand = corpusBands.as("c")
       .join(sized(lshBands(minhashSignature(nSets)).as("n")),
         col("c.band") === col("n.band") &&
           col("c.band_hash") === col("n.band_hash") &&
           col("c.id") =!= col("n.id"))
-      .select(col("n.id").as("new_id"), col("c.id").as("corpus_id"))
-      .distinct()
-    cand
-      .join(sized(nSets.select(col("id").as("new_id"), col("hs").as("hs_n"))),
-        Seq("new_id"))
-      .join(cSets.select(col("id").as("corpus_id"), col("hs").as("hs_c")),
-        Seq("corpus_id"))
-      .withColumn("shared", size(array_intersect(col("hs_n"), col("hs_c"))))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (size(col("hs_n")) + size(col("hs_c")) - col("shared")).cast("double"))
+      .select(col("c.id").as("corpus_id"), col("n.id").as("new_id"))
+      .observe(counted, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val fit = counted.get("n").asInstanceOf[Long] * CandidateRowBytes <=
+      maxBroadcastBytes
+    val pairs = withSetJaccard(
+        corpusSets.select(col("id").as("corpus_id"), col("hs").as("hs_c"))
+          .join(if (fit) broadcast(cand) else cand, Seq("corpus_id"))
+          .join(sized(nSets.select(col("id").as("new_id"), col("hs").as("hs_n"))),
+            Seq("new_id")),
+        "hs_n", "hs_c")
       .filter(col("jaccard") >= minJaccard)
       .select("new_id", "corpus_id", "jaccard")
+    (pairs, fit)
   }
+
+  /** Adds the exact shingle-set Jaccard of array columns `a` and `b`
+    * as `jaccard` (and their intersection size as `shared`) — the one
+    * verify rule every MinHash candidate path applies.
+    */
+  private[ext] def withSetJaccard(df: DataFrame, a: String, b: String): DataFrame =
+    df.withColumn("shared", size(array_intersect(col(a), col(b))))
+      .withColumn("jaccard", col("shared").cast("double") /
+        (size(col(a)) + size(col(b)) - col("shared")).cast("double"))
 
   /** LSH candidate generation + exact array-intersect verify over a
     * (id, hs) shingle-set frame — the shared tail of
@@ -913,12 +970,10 @@ object Dedup {
     */
   private[ext] def minhashRepPairs(repSets: DataFrame,
       minJaccard: Double): DataFrame =
-    lshCandidatePairs(lshBands(minhashSignature(repSets)))
-      .join(repSets.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-      .join(repSets.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .withColumn("shared", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (size(col("hs_a")) + size(col("hs_b")) - col("shared")).cast("double"))
+    withSetJaccard(lshCandidatePairs(lshBands(minhashSignature(repSets)))
+        .join(repSets.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
+        .join(repSets.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b")),
+        "hs_a", "hs_b")
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
 
@@ -2172,14 +2227,12 @@ object Dedup {
       .join(seenBands.select(col("h").as("seen_h"), col("band"),
         col("band_hash")), Seq("band", "band_hash"))
       .select(col("id").as("h"), col("seen_h")).distinct()
-    val dropped = cand
-      .join(sets.select(col("id").as("h"), col("hs").as("hs_n")), Seq("h"))
-      .join(seenShingles.select(col("h").as("seen_h"), col("hs").as("hs_c")),
-        Seq("seen_h"))
-      .withColumn("shared", size(array_intersect(col("hs_n"), col("hs_c"))))
-      .filter(col("shared").cast("double") /
-        (size(col("hs_n")) + size(col("hs_c")) - col("shared")).cast("double")
-        >= minJaccard)
+    val dropped = withSetJaccard(cand
+        .join(sets.select(col("id").as("h"), col("hs").as("hs_n")), Seq("h"))
+        .join(seenShingles.select(col("h").as("seen_h"), col("hs").as("hs_c")),
+          Seq("seen_h")),
+        "hs_n", "hs_c")
+      .filter(col("jaccard") >= minJaccard)
       .select("h").distinct()
     val kept = fresh.join(dropped, Seq("h"), "left_anti")
       .select("id", "idx", "para")
@@ -2188,10 +2241,21 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs: cosine(a, b) ≥ `minCos`,
     * id_a < id_b. All-pairs here (fine at verify scale); at 100 TB
-    * route through [[Similarity]]'s LSH bucketing first.
+    * route through [[Similarity.lshNearDupPairs]]' LSH bucketing
+    * instead. The whole frame is the broadcast side of the nested
+    * loop, so the face is guarded like [[Similarity.trainingTriplets]]:
+    * one count job, and past [[Similarity.MaxScoredPairs]] (n² pairs
+    * enumerated) it fails loud instead of OOMing the driver or an
+    * executor.
     */
   def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       minCos: Double): DataFrame = {
+    // BigInt for the same overflow reason as Similarity.trainingTriplets
+    val n = BigInt(emb.count())
+    require(n * n <= Similarity.MaxScoredPairs,
+      s"embeddingNearDupPairs: ${n * n} scored pairs exceeds " +
+        s"Similarity.MaxScoredPairs=${Similarity.MaxScoredPairs} — use " +
+        "Similarity.lshNearDupPairs (pairs only within LSH buckets)")
     val prepped = Similarity.withNorm(
       emb.select(col(idCol).as("id"), col(vecCol).as("vec")))
     // the all-pairs nested loop inherits the scan's partitioning on

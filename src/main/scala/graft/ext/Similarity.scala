@@ -56,6 +56,13 @@ object Similarity {
     */
   private val MaxAggTopK = 4096
 
+  /** Default scored-pair bound of the brute all-pairs faces
+    * ([[trainingTriplets]], [[mineBitext]],
+    * [[graft.ext.Dedup.embeddingNearDupPairs]]): past it they fail loud
+    * naming their scale twin instead of OOMing an executor hours in.
+    */
+  val MaxScoredPairs: Long = 200_000_000L
+
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =
     if (k > MaxAggTopK) {
       import org.apache.spark.sql.expressions.Window
@@ -148,7 +155,7 @@ object Similarity {
   def trainingTriplets(corpus: DataFrame, anchors: DataFrame,
       posFloor: Double = 0.45, negCeiling: Double = 0.45,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxScoredPairs: Long = 200_000_000L): DataFrame = {
+      maxScoredPairs: Long = MaxScoredPairs): DataFrame = {
     // BigInt: a Long product wraps negative past 2^63 — at exactly the
     // corpus sizes the guard exists to reject — and would slip through.
     // corpus-as-anchors (the registry face and the pretraining-loop
@@ -271,7 +278,7 @@ object Similarity {
   def mineBitext(src: DataFrame, tgt: DataFrame, k: Int = 4,
       marginFloor: Double = 1.02,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxScoredPairs: Long = 200_000_000L): DataFrame = {
+      maxScoredPairs: Long = MaxScoredPairs): DataFrame = {
     // BigInt for the same overflow reason as [[trainingTriplets]]
     val pairs = BigInt(src.count()) * BigInt(tgt.count())
     require(pairs <= maxScoredPairs,

@@ -42,6 +42,15 @@ import org.apache.spark.sql.types._
   * are written pre-distinct'd so gate-side semi-joins need no
   * re-aggregation. Writes go through the Hadoop FS API, so `dir` can
   * be any supported scheme (local, HDFS, cloud object store).
+  *
+  * Serve and maintenance shape: [[admitFromIndexes]] hashes the slice
+  * once and streams every store table against broadcast sides built
+  * from the slice or from its priced candidate pairs, so no hash table
+  * is ever built from a store scan. The admission build and append,
+  * and every compaction and delete that goes through [[swapRewrite]],
+  * write their tables at once, one thread per table
+  * ([[writeConcurrently]]); each write reads only its own table plus
+  * frames materialized before the call.
   */
 object IndexStore {
 
@@ -62,26 +71,27 @@ object IndexStore {
     import graft.ext.{Dedup, QualityModel}
     val spark = corpus.sparkSession
 
-    corpus.select(md5(col(textCol)).as("digest")).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$DigestsTable")
-
-    Dedup.spanHashIndex(corpus, idCol, textCol, spanWords)
-      .select("h").distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$SpanHashesTable")
-
     val sets = corpus.select(col(idCol).as("id"),
       graft.functions.TextHashFunctions.shingle_hashes(
         col(textCol), graft.ext.HashDefs.ShingleN).as("hs"))
     val idType = sets.schema("id").dataType
-    sets.write.mode(SaveMode.Overwrite).parquet(s"$dir/$ShingleSetsTable")
-    // bands derive from the PERSISTED sets, so the two fuzzy tables
-    // can never drift apart across a partial rebuild
-    Dedup.lshBands(Dedup.minhashSignature(readTable(spark,
-        s"$dir/$ShingleSetsTable", Some(shingleSetsSchema(idType)))))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$BandIndexTable")
 
-    QualityModel.nbTermWeightsMicro(corpus, idCol, textCol)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$NbWeightsTable")
+    writeConcurrently(spark)(
+      () => corpus.select(md5(col(textCol)).as("digest")).distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$DigestsTable"),
+      () => Dedup.spanHashIndex(corpus, idCol, textCol, spanWords)
+        .select("h").distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$SpanHashesTable"),
+      { () =>
+        sets.write.mode(SaveMode.Overwrite).parquet(s"$dir/$ShingleSetsTable")
+        // bands derive from the PERSISTED sets, so the two fuzzy tables
+        // can never drift apart across a partial rebuild
+        Dedup.lshBands(Dedup.minhashSignature(readTable(spark,
+            s"$dir/$ShingleSetsTable", Some(shingleSetsSchema(idType)))))
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$BandIndexTable")
+      },
+      () => QualityModel.nbTermWeightsMicro(corpus, idCol, textCol)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$NbWeightsTable"))
 
     writeManifest(spark, dir, Seq(
       "kind" -> "\"admission\"",
@@ -201,26 +211,79 @@ object IndexStore {
     * the in-plan ladder + quality gate admit (oracle-pinned by
     * q_admit_persisted) while never touching the corpus — the serve
     * path a nightly-built 100 TB index feeds.
+    *
+    * Plan shape: the slice is hashed ONCE into one eagerly
+    * checkpointed frame (id, text, digest, shingle set), its size
+    * estimate observed on that same job
+    * ([[graft.ext.Dedup.checkpointPriced]]: no probe job; an
+    * over-guard slice is materialized too, and why that is the
+    * cheaper side is said there). Every store table is then the
+    * STREAMED side of its join, and no hash table is built from a
+    * store scan:
+    *  - `digests` semi-joins the slice's digests, `span_hashes` joins
+    *    its (span hash, id) rows; both build sides are broadcast when
+    *    the slice estimate fits [[HashDefs.CrossBroadcastMaxBytes]];
+    *  - the fuzzy rung is [[graft.ext.Dedup.crossPairsFromSets]], the
+    *    implementation [[graft.ext.Dedup.minhashCrossPairsFromIndex]]
+    *    runs too: `band_index` streams against the slice's bands,
+    *    `shingle_sets` against the candidate pairs, which are
+    *    checkpointed and broadcast only when their OBSERVED count
+    *    fits the guard (their size grows with the store's fan-out,
+    *    which no slice estimate bounds).
+    * Past a guard, plain joins: degraded, never a driver OOM. The
+    * exact rung stays row-wise (anti-join on the digest); the
+    * substring and fuzzy hit ids are anti-joined as one union with no
+    * `distinct` (anti-joins are set-semantic, so duplicate hit rows
+    * never change a verdict). The two hit frames that come back
+    * broadcast are bounded by the slice: matched store digests and
+    * span hashes number at most the slice's own, because those tables
+    * hold each hash once — written distinct, appended from admitted
+    * documents whose hashes the exact and substring rungs just proved
+    * absent, and re-distinct'd by [[compactAdmissionIndexes]] — and
+    * the fuzzy hits at most the priced candidates. So admit cost
+    * scales with the slice and its candidates plus one streamed scan
+    * of each store table.
     */
   def admitFromIndexes(fresh: DataFrame, spark: SparkSession, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      spanWords: Int = 8, minJaccard: Double = 0.5): DataFrame = {
-    import graft.ext.{Dedup, QualityModel}
-    val exactNovel = fresh.withColumn("digest", md5(col(textCol)))
-      .join(readDigests(spark, dir), Seq("digest"), "left_anti")
-      .drop("digest")
-    val substrHits = Dedup.spanHashIndex(fresh, idCol, textCol, spanWords)
-      .join(readSpanHashes(spark, dir), Seq("h"), "left_semi")
-      .select(col("id").as(idCol)).distinct()
-    val fuzzyHits = Dedup.minhashCrossPairsFromIndex(
-        readBandIndex(spark, dir), readShingleSets(spark, dir),
-        fresh, idCol, textCol, minJaccard)
-      .select(col("new_id").as(idCol)).distinct()
+      spanWords: Int = 8, minJaccard: Double = 0.5): DataFrame =
+    admitPlan(fresh, spark, dir, idCol, textCol, spanWords, minJaccard,
+      graft.ext.HashDefs.CrossBroadcastMaxBytes)
+
+  /** [[admitFromIndexes]] with its broadcast guard as a parameter, so a
+    * spec can force the over-guard path.
+    */
+  private[io] def admitPlan(fresh: DataFrame, spark: SparkSession,
+      dir: String, idCol: String, textCol: String, spanWords: Int,
+      minJaccard: Double, maxBroadcastBytes: Long): DataFrame = {
+    import graft.ext.{Dedup, HashDefs, QualityModel}
+    val (slice, estBytes) = Dedup.checkpointPriced(fresh, textCol)(
+      _.select(col(idCol), col(textCol),
+        md5(col(textCol)).as("__digest"),
+        graft.functions.TextHashFunctions.shingle_hashes(
+          col(textCol), HashDefs.ShingleN).as("__hs")))
+    val small = estBytes <= maxBroadcastBytes
+    def sized(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+
+    val exactHits = readDigests(spark, dir)
+      .join(sized(slice.select(col("__digest").as("digest"))), Seq("digest"),
+        "left_semi")
+      .select(col("digest").as("__digest"))
+    val substrHits = readSpanHashes(spark, dir)
+      .join(sized(Dedup.spanHashIndex(slice, idCol, textCol, spanWords)
+        .select("h", "id")), Seq("h"))
+      .select(col("id").as("__hit"))
+    val (fuzzyPairs, pairsFit) = Dedup.crossPairsFromSets(
+      readBandIndex(spark, dir), readShingleSets(spark, dir),
+      slice.select(col(idCol).as("id"), col("__hs").as("hs")),
+      small, minJaccard, maxBroadcastBytes)
+    val hits = substrHits.union(fuzzyPairs.select(col("new_id").as("__hit")))
     val weights = readNbWeightsMicro(spark, dir)
     QualityModel.admitByModel(
-        exactNovel
-          .join(substrHits, Seq(idCol), "left_anti")
-          .join(fuzzyHits, Seq(idCol), "left_anti"),
+        slice
+          .join(sized(exactHits), Seq("__digest"), "left_anti")
+          .join(if (small && pairsFit) broadcast(hits) else hits,
+            col(idCol) === col("__hit"), "left_anti"),
         weights, textCol)
       .select(idCol)
   }
@@ -239,23 +302,26 @@ object IndexStore {
     * (llr depends on global totals) — retrain it on the next corpus
     * refresh, like every shipped model artifact. Equality of
     * append-then-serve vs rebuild-over-union is pinned in
-    * IndexStoreSpec.
+    * IndexStoreSpec. The four appends run concurrently, so `newDocs`
+    * must not read the store's own tables — materialize it first (the
+    * ingest loop's admitted frame is a checkpoint).
     */
   def appendAdmissionIndexes(newDocs: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
       spanWords: Int = 8): Unit = {
     import graft.ext.Dedup
-    newDocs.select(md5(col(textCol)).as("digest")).distinct()
-      .write.mode(SaveMode.Append).parquet(s"$dir/$DigestsTable")
-    Dedup.spanHashIndex(newDocs, idCol, textCol, spanWords)
-      .select("h").distinct()
-      .write.mode(SaveMode.Append).parquet(s"$dir/$SpanHashesTable")
     val sets = newDocs.select(col(idCol).as("id"),
       graft.functions.TextHashFunctions.shingle_hashes(
         col(textCol), graft.ext.HashDefs.ShingleN).as("hs"))
-    sets.write.mode(SaveMode.Append).parquet(s"$dir/$ShingleSetsTable")
-    Dedup.lshBands(Dedup.minhashSignature(sets))
-      .write.mode(SaveMode.Append).parquet(s"$dir/$BandIndexTable")
+    writeConcurrently(newDocs.sparkSession)(
+      () => newDocs.select(md5(col(textCol)).as("digest")).distinct()
+        .write.mode(SaveMode.Append).parquet(s"$dir/$DigestsTable"),
+      () => Dedup.spanHashIndex(newDocs, idCol, textCol, spanWords)
+        .select("h").distinct()
+        .write.mode(SaveMode.Append).parquet(s"$dir/$SpanHashesTable"),
+      () => sets.write.mode(SaveMode.Append).parquet(s"$dir/$ShingleSetsTable"),
+      () => Dedup.lshBands(Dedup.minhashSignature(sets))
+        .write.mode(SaveMode.Append).parquet(s"$dir/$BandIndexTable"))
   }
 
   /** Compaction — the maintenance face [[appendAdmissionIndexes]]
@@ -308,7 +374,10 @@ object IndexStore {
 
   /** The rewrite-through-tmp + FS-rename swap both compaction faces
     * share: read each existing table, apply the per-table rewrite
-    * into `.compact_<t>`, delete the original, rename the rewrite in.
+    * into `.compact_<t>`, delete the original, rename the rewrite in
+    * — each table on its own thread ([[writeConcurrently]]; a rewrite
+    * reads only its own table and frames materialized before the
+    * call, as every delete face's checkpointed id set is).
     * The one non-atomic window is delete-to-rename — the standard
     * FS-level swap; run compactions in a maintenance slot.
     * `mustExist` picks the missing-table semantics: skipping is right
@@ -322,7 +391,7 @@ object IndexStore {
       read: Option[String => DataFrame] = None)(
       write: (DataFrame, String) => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    tables.foreach { t =>
+    writeConcurrently(spark)(tables.map { t => () =>
       val cur = new org.apache.hadoop.fs.Path(s"$dir/$t")
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/.compact_$t")
       val fs = cur.getFileSystem(conf)
@@ -332,7 +401,54 @@ object IndexStore {
         require(fs.rename(tmp, cur), s"compact: could not swap in $tmp")
       } else require(!mustExist,
         s"swapRewrite: required table $cur does not exist")
+    }: _*)
+  }
+
+  /** Runs independent table writes at once, one thread per write, and
+    * returns when every one has finished. Each write goes through
+    * `SQLExecution.withThreadLocalCaptured` — the wrapper Spark runs
+    * its broadcast futures under — so its jobs carry the caller's
+    * local properties (job group, streaming query properties, root
+    * execution id) and active session. A failure never cuts the wait
+    * short: the first failure in `writes` order is rethrown with the
+    * later ones suppressed, and no job of the call starts after it
+    * returns.
+    *
+    * CONTRACT: each write reads only its own table plus frames
+    * materialized before the call — never a table another write of
+    * the same call mutates. Writes whose ORDER is a crash contract
+    * ([[appendParagraphFuzzyIndex]]' hash-table-last append) stay
+    * sequential and must not come through here.
+    */
+  private def writeConcurrently(spark: SparkSession)(writes: (() => Unit)*): Unit =
+    if (writes.size <= 1) writes.foreach(_())
+    else {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val failures = writes
+        .map(w => org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(session, writePool)(w()))
+        .flatMap(f => scala.util.Try(f.join()).failed.toOption)
+        .map {
+          case e: java.util.concurrent.CompletionException if e.getCause != null =>
+            e.getCause
+          case e => e
+        }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
     }
+
+  /** The writers' threads: cached daemon threads, reused across calls
+    * and retired after a minute idle (the shape of the pool Spark runs
+    * broadcast builds on), so a call runs one thread per table it
+    * writes.
+    */
+  private lazy val writePool = java.util.concurrent.Executors.newCachedThreadPool {
+    (r: Runnable) =>
+      val t = new Thread(r, "indexstore-write")
+      t.setDaemon(true)
+      t
   }
 
   /** Session-scoped build-once memo: the first call for a (session,

@@ -455,6 +455,24 @@ class DedupSpec extends SparkSpec {
       Seq(1L, 2L), Seq(1L, 4L), Seq(2L, 4L), Seq(3L, 4L))
   }
 
+  test("embeddingNearDupPairs: past Similarity.MaxScoredPairs it fails " +
+      "loud naming the LSH twin") {
+    // one-element vectors: only the guard's count job runs. 14,142² is
+    // under the 200M bound (the lazy frame is returned, never run);
+    // 14,143² is over it
+    def vecs(n: Long) = spark.range(n)
+      .select(col("id").as("vec_id"), array(lit(1.0f)).as("embedding"))
+    Similarity.MaxScoredPairs shouldBe 200000000L
+    Dedup.embeddingNearDupPairs(vecs(14142L), "vec_id", "embedding",
+      minCos = 0.7).columns should contain("id_a")
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.embeddingNearDupPairs(vecs(14143L), "vec_id", "embedding",
+        minCos = 0.7)
+    }
+    ex.getMessage should include("200024449 scored pairs")
+    ex.getMessage should include("lshNearDupPairs")
+  }
+
   test("dropRepeatedSpans: corpus-wide span counting, ragged tail, order kept") {
     // span width 2, threshold 1: "a b" appears in docs 1,2 and twice in
     // doc 3 → removed everywhere; ragged tails ("e") survive.

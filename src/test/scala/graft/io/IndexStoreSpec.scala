@@ -1093,15 +1093,15 @@ class IndexStoreSpec extends SparkSpec {
     JobLog(sc)(spark.read.parquet(s"$dir/${IndexStore.DigestsTable}"))._2
       .map(_.sqlExecution) shouldBe Seq(false)
 
-    // building the frame, before its action: the fuzzy rung's size
-    // probe and checkpoint are the only jobs a warm call runs
-    val (_, fuzzy) = JobLog(sc)(graft.ext.Dedup.minhashCrossPairsFromIndex(
-      IndexStore.readBandIndex(spark, dir), IndexStore.readShingleSets(spark, dir),
-      fresh, "doc_id", "text"))
+    // building the frame, before its action, a warm call runs three
+    // jobs: the slice checkpoint (its size estimate observed on that
+    // same job, no probe job), the slice bands' broadcast and the
+    // candidate-pair checkpoint (its row count observed the same way)
     val (first, cold) = JobLog(sc)(IndexStore.admitFromIndexes(fresh, spark, dir))
     val (second, warm) = JobLog(sc)(IndexStore.admitFromIndexes(fresh, spark, dir))
-    (fuzzy ++ cold ++ warm).filterNot(_.sqlExecution) shouldBe empty
-    warm shouldBe fuzzy
+    (cold ++ warm).filterNot(_.sqlExecution) shouldBe empty
+    warm should have size 3
+    warm.map(_.callSite).count(_.startsWith("localCheckpoint at Dedup.scala")) shouldBe 2
     // the cold call also loads the weights: count (map stage + result)
     // and collect
     cold.size - warm.size should be >= 3
@@ -1210,5 +1210,218 @@ class IndexStoreSpec extends SparkSpec {
         .collect().map(_.get(0).toString).toSet shouldBe want
       rmDirs(dir)
     }
+  }
+
+  /** The admission ladder composed as before the slice-side plan: the
+    * exact and substring rungs' hash tables built from the store, the
+    * fuzzy rung's pairs from [[graft.ext.Dedup.minhashCrossPairsFromIndex]],
+    * hit ids distinct'd — the reference the plan's verdicts are held to.
+    */
+  private def ladderReplay(fresh: org.apache.spark.sql.DataFrame,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val exactNovel = fresh.withColumn("digest", md5(col("text")))
+      .join(IndexStore.readDigests(spark, dir), Seq("digest"), "left_anti")
+      .drop("digest")
+    val substrHits = graft.ext.Dedup.spanHashIndex(fresh, "doc_id", "text", 8)
+      .join(IndexStore.readSpanHashes(spark, dir), Seq("h"), "left_semi")
+      .select(col("id").as("doc_id")).distinct()
+    val fuzzyHits = graft.ext.Dedup.minhashCrossPairsFromIndex(
+        IndexStore.readBandIndex(spark, dir),
+        IndexStore.readShingleSets(spark, dir), fresh, "doc_id", "text")
+      .select(col("new_id").as("doc_id")).distinct()
+    graft.ext.QualityModel.admitByModel(
+        exactNovel.join(substrHits, Seq("doc_id"), "left_anti")
+          .join(fuzzyHits, Seq("doc_id"), "left_anti"),
+        IndexStore.readNbWeightsMicro(spark, dir))
+      .select("doc_id")
+  }
+
+  /** Admitted ids, sorted, with their multiplicity. */
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).sorted.toSeq
+
+  /** Every node of an executed plan: through adaptive wrappers, query
+    * stages and subqueries.
+    */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(planNodes)
+    }
+  }
+
+  test("admission plan: each store table streams against a slice-built " +
+      "side; no broadcast of a store scan, no shuffle for hit ids") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    // what a broadcast's hash table is built from, through its
+    // row-local (single-child) operators
+    def buildSource(p: SparkPlan): SparkPlan = p match {
+      case q: QueryStageExec => buildSource(q.plan)
+      case o if o.children.size == 1 => buildSource(o.children.head)
+      case o => o
+    }
+    // every query building and running the frame runs: the eager
+    // checkpoints taken while it is built are plans of their own
+    def executed(df: => org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+      org.apache.spark.JobLog.plans(spark)(df.collect())._2.flatMap(planNodes)
+    def table(s: FileSourceScanExec) = s.relation.location.rootPaths.head.getName
+    def storeBuilds(plan: Seq[SparkPlan]): Seq[String] = plan.collect {
+      case b: BroadcastExchangeExec => buildSource(b.child)
+    }.collect { case s: FileSourceScanExec => table(s) }
+    def shuffles(plan: Seq[SparkPlan]) =
+      plan.collect { case e: ShuffleExchangeExec => e }
+
+    val dir = tmpDir("idxplan")
+    IndexStore.writeAdmissionIndexes(seen, dir)
+    // a stored document's copy gives every rung a hit: AQE drops the
+    // subtree of an anti-join whose build side came out empty
+    val probe = slice.union(seen
+      .filter(org.apache.spark.sql.functions.length(col("text")) > 200)
+      .limit(1).select(lit(900000002L).as("doc_id"), col("text")))
+      .localCheckpoint() // its source scan stays out of the plans
+    IndexStore.admitFromIndexes(probe, spark, dir) // loads the weights
+    val plan = executed(IndexStore.admitFromIndexes(probe, spark, dir))
+    plan.collect { case s: FileSourceScanExec => table(s) }.toSet shouldBe Set(
+      IndexStore.DigestsTable, IndexStore.SpanHashesTable,
+      IndexStore.BandIndexTable, IndexStore.ShingleSetsTable)
+    plan.collect { case b: BroadcastExchangeExec => b } should not be empty
+    storeBuilds(plan) shouldBe empty
+    shuffles(plan) shouldBe empty
+    // control: the store-side composition builds from store scans and
+    // shuffles its hit ids to distinct them
+    val replay = executed(ladderReplay(probe, dir))
+    storeBuilds(replay) should not be empty
+    shuffles(replay) should not be empty
+    rmDirs(dir)
+  }
+
+  test("store fan-out: candidates past the guard are not broadcast, " +
+      "however small the slice, and the verdicts hold") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val dir = tmpDir("idxfan")
+    val page = seen.filter(org.apache.spark.sql.functions.length(col("text")) > 200)
+      .select("text").head().getString(0)
+    // 300 stored copies of one page, each with its own footer: the
+    // probe's copy collides with every one of them in its bands
+    val copies = (1L to 300L).map(i => (800000000L + i, s"$page footer $i"))
+      .toDF("doc_id", "text")
+    IndexStore.writeAdmissionIndexes(seen.select("doc_id", "text").union(copies), dir)
+    val probe = slice.limit(2).union(
+      Seq((900000003L, s"$page footer new")).toDF("doc_id", "text"))
+      .localCheckpoint()
+    // a guard the slice estimate just fits, so every slice-side frame
+    // broadcasts; the candidates (300 copies × colliding bands, 64 B
+    // a row) are priced over it
+    val guard = probe.agg(org.apache.spark.sql.functions.sum(
+        org.apache.spark.sql.functions.length(col("text")))).head().getLong(0) *
+      8L + probe.count() * 64L
+    // the candidate pairs' forced broadcast; past the guard the planner
+    // and AQE pick build sides from their own size estimates
+    def pairSides(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      plans.flatMap(planNodes).collect {
+        case b: BroadcastExchangeExec => b.output.map(_.name)
+      }.filter(_ == Seq("corpus_id", "new_id"))
+    val want = ids(ladderReplay(probe, dir))
+    want should not contain 900000003L
+    val (free, freePlans) = org.apache.spark.JobLog.plans(spark)(
+      ids(IndexStore.admitFromIndexes(probe, spark, dir)))
+    free shouldBe want
+    pairSides(freePlans) should not be empty // control: default guard
+    val (capped, cappedPlans) = org.apache.spark.JobLog.plans(spark)(
+      ids(IndexStore.admitPlan(probe, spark, dir, "doc_id", "text", 8, 0.5,
+        maxBroadcastBytes = guard)))
+    capped shouldBe want
+    cappedPlans.flatMap(planNodes)
+      .collect { case b: BroadcastExchangeExec => b } should not be empty
+    pairSides(cappedPlans) shouldBe empty
+    rmDirs(dir)
+  }
+
+  test("an over-guard slice (broadcast cap 0) admits the same set") {
+    val dir = tmpDir("idxguard")
+    IndexStore.writeAdmissionIndexes(seen, dir)
+    val want = ids(IndexStore.admitFromIndexes(slice, spark, dir))
+    want should not be empty
+    ids(IndexStore.admitPlan(slice, spark, dir, "doc_id", "text", 8, 0.5,
+      maxBroadcastBytes = 0L)) shouldBe want
+    // an empty slice still gets its observed sizes (0), not a wait
+    ids(IndexStore.admitFromIndexes(slice.filter(lit(false)), spark, dir)) shouldBe empty
+    rmDirs(dir)
+  }
+
+  test("a null-text row and duplicate-id rows keep the store-side " +
+      "ladder's verdicts") {
+    import spark.implicits._
+    val dir = tmpDir("idxedge")
+    IndexStore.writeAdmissionIndexes(seen, dir)
+    val base = slice.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    val ok = ids(IndexStore.admitFromIndexes(slice, spark, dir))
+    ok.size should be >= 2
+    val Seq(a, b) = ok.take(2)
+    val copy = seen.filter(org.apache.spark.sql.functions.length(col("text")) > 200)
+      .select("text").head().getString(0)
+    val nullId = 900000001L
+    val edge = (base ++ Seq(
+        nullId -> (null: String),
+        a -> copy,                 // a stored document's copy under id a
+        b -> base.toMap.apply(a))) // a second novel row under id b
+      .toDF("doc_id", "text")
+    val want = ids(ladderReplay(edge, dir))
+    ids(IndexStore.admitFromIndexes(edge, spark, dir)) shouldBe want
+    want should not contain nullId
+    // the copy's exact hit drops only its own row; its span and fuzzy
+    // hits drop every row of id a
+    want should not contain a
+    want.count(_ == b) shouldBe 2
+    rmDirs(dir)
+  }
+
+  test("maintenance writes run concurrently under the caller's job group; " +
+      "a failed table write fails the call after every write has finished") {
+    val sc = spark.sparkContext
+    val dir = tmpDir("idxconc")
+    IndexStore.writeAdmissionIndexes(seen, dir)
+    val s1 = docs.filter(bucket >= 500 && bucket < 550).select("doc_id", "text")
+      .localCheckpoint()
+    val s2 = docs.filter(bucket >= 550 && bucket < 600).select("doc_id", "text")
+      .localCheckpoint()
+    // every job of the append and the compaction, whichever thread
+    // started it, carries the caller's job group
+    val (_, started, _) = JobLog.record(sc) {
+      IndexStore.appendAdmissionIndexes(s1, dir)
+      IndexStore.compactAdmissionIndexes(spark, dir)
+    }
+    started.size should be >= 8 // a write per table, twice
+    started.filterNot(_.tagged) shouldBe empty
+    started.filterNot(_.job.sqlExecution) shouldBe empty
+
+    // span_hashes becomes a plain file: its append and its compaction
+    // read fail, the other three tables' writes succeed
+    val spans = java.nio.file.Paths.get(dir, IndexStore.SpanHashesTable)
+    rmDirs(spans.toString)
+    java.nio.file.Files.write(spans, "not parquet".getBytes("UTF-8"))
+    def messages(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    for ((name, call) <- Seq[(String, () => Unit)](
+        "append" -> (() => IndexStore.appendAdmissionIndexes(s2, dir)),
+        "compact" -> (() => IndexStore.compactAdmissionIndexes(spark, dir))))
+      withClue(name) {
+        val (r, jobs, returnedMs) =
+          JobLog.record(sc, lingerMs = 1500L)(scala.util.Try(call()))
+        messages(r.failed.get) should include(IndexStore.SpanHashesTable)
+        jobs.filter(_.tagged) should not be empty
+        jobs.filter(_.atMs > returnedMs) shouldBe empty
+      }
+    // the other tables took both calls: s2's documents are in the store
+    val s2Ids = s2.select("doc_id").collect().map(_.getLong(0)).toSet
+    IndexStore.readShingleSets(spark, dir).select("id").collect()
+      .map(_.getLong(0)).toSet.intersect(s2Ids) shouldBe s2Ids
+    rmDirs(dir)
   }
 }
