@@ -134,9 +134,12 @@ object Dedup {
     * document on a few cores while the rest idle. Conditional on the
     * ACTUAL partition count so a real multi-split corpus — the 100 TB
     * case, where an unconditional repartition would be a full-corpus
-    * shuffle of raw text — passes through untouched.
+    * shuffle of raw text — passes through untouched. [[Similarity]]'s
+    * all-pairs scoring applies the same rule before its
+    * BroadcastNestedLoopJoin, whose stream side inherits the scan's
+    * partitioning (|queries|·|corpus| pairs on a few cores otherwise).
     */
-  private def scanParallelized(df: DataFrame): DataFrame = {
+  private[ext] def scanParallelized(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 4 >= target) df
     else df.repartition(target)

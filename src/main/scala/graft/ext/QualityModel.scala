@@ -49,9 +49,10 @@ object QualityModel {
     * directly re-evaluates the interpreted stopword-filter lambda per
     * TOKEN row (higher-order functions are CodegenFallback, and any
     * non-attribute projection lands above the Generate) — measured
-    * 3.6 s vs 0.5 s for this aggregate at sf0.1 (DevNb profiler). The
-    * (id, term) pre-aggregation also map-side-combines each doc's
-    * repeated terms before anything shuffles.
+    * 3.6 s vs 0.5 s for this aggregate at sf0.1 (SCALE.md §NB
+    * model-based quality filtering). The (id, term) pre-aggregation
+    * also map-side-combines each doc's repeated terms before anything
+    * shuffles.
     */
   private def termClassCounts(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
@@ -136,9 +137,10 @@ object QualityModel {
     val rows = nbTermWeightsMicro(df, idCol, textCol)
     // count-then-collect, NOT limit(maxVocab+1).collect(): a LIMIT on
     // top of this aggregate replans per take attempt under AQE and
-    // cost a flat ~3.5 s at bench scale (measured, DevNb profiler) — the
-    // count is one extra vocab-sized job (~0.2 s) and keeps the
-    // collect bounded-by-contract
+    // cost a flat ~3.5 s at bench scale (measured, SCALE.md §NB
+    // model-based quality filtering) — the count is one extra
+    // vocab-sized job (~0.2 s) and keeps the collect
+    // bounded-by-contract
     val n = rows.count()
     require(n <= maxVocab,
       s"nbWeightsMicro: vocabulary has $n terms > maxVocab=$maxVocab — " +

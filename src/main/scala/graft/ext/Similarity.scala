@@ -107,23 +107,9 @@ object Similarity {
   /** The exact-cosine scored frame every brute face ranks or filters:
     * one corpus scan against the broadcast query side.
     */
-  /** Repair pathological scan under-parallelism before an all-pairs
-    * scoring join (the [[graft.ext.Dedup]] scanParallelized rule): a
-    * corpus that arrives as a handful of unsplittable inputs would
-    * score |queries|·|corpus| pairs on a few cores while the rest
-    * idle — the BroadcastNestedLoopJoin's stream side inherits the
-    * scan's partitioning. Conditional on the ACTUAL partition count so
-    * a real multi-split corpus passes through with no shuffle.
-    */
-  private def scanParallelized(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 4 >= target) df
-    else df.repartition(target)
-  }
-
   private def bruteScored(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val c = scanParallelized(
+    val c = Dedup.scanParallelized(
       withNorm(corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))))
     val q = querySide(queries, idCol, vecCol)
     c.join(broadcast(q), col("id") =!= col("query_id"))
@@ -176,7 +162,7 @@ object Similarity {
     // BroadcastNestedLoopJoin output for the identical scored frame.
     val scored =
       if (anchors eq corpus) {
-        val c = scanParallelized(
+        val c = Dedup.scanParallelized(
           withNorm(corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))))
         val q = querySide(corpus, idCol, vecCol)
         c.join(broadcast(q), col("id") > col("query_id"))
@@ -1138,7 +1124,7 @@ object Similarity {
     }.reduce(_ + _)
     // the PQ encode + ADC walk inherit the scan's partitioning on the
     // nested loop's stream side — parallelize a few-split corpus
-    val scored = scanParallelized(codes)
+    val scored = Dedup.scanParallelized(codes)
       .join(broadcast(luts), col("id") =!= col("query_id"))
       .withColumn("approx", adc)
     // aggregate top-k, not a row_number window (the rankTopK rewrite)

@@ -72,7 +72,7 @@ object TextHashing {
     * hashing itself: the composed Column form re-evaluated the
     * span_hashes child once per lambda iteration inside `transform`
     * (~window·spans md5 walks per document — measured 0.16 s → 4.5 s
-    * at sf0.1, DevNb).
+    * at sf0.1, SCALE.md §Winnowed substring index).
     */
   def winnowedSpanHashes(text: UTF8String, w: Int, window: Int): ArrayData = {
     val spansData = spanHashes(text, w)

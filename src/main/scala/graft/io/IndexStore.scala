@@ -251,12 +251,29 @@ object IndexStore {
       graft.ext.HashDefs.CrossBroadcastMaxBytes)
 
   /** [[admitFromIndexes]] with its broadcast guard as a parameter, so a
-    * spec can force the over-guard path.
+    * spec can force the over-guard path: the model rung over
+    * [[novelFromIndexes]].
     */
   private[io] def admitPlan(fresh: DataFrame, spark: SparkSession,
       dir: String, idCol: String, textCol: String, spanWords: Int,
+      minJaccard: Double, maxBroadcastBytes: Long): DataFrame =
+    graft.ext.QualityModel.admitByModel(
+        novelFromIndexes(fresh, spark, dir, idCol, textCol, spanWords,
+          minJaccard, maxBroadcastBytes),
+        readNbWeightsMicro(spark, dir), textCol)
+      .select(idCol)
+
+  /** The exact, substring and fuzzy rungs of [[admitFromIndexes]]: the
+    * hashed slice rows (`idCol`, `textCol`, `__digest`, `__hs`) that
+    * no store table matches, with the plan shape documented there.
+    * The one copy of the store-side ladder: the batch admission runs
+    * the model rung over it, and the streaming full-ladder gate its
+    * embedding rung.
+    */
+  private[graft] def novelFromIndexes(fresh: DataFrame, spark: SparkSession,
+      dir: String, idCol: String, textCol: String, spanWords: Int,
       minJaccard: Double, maxBroadcastBytes: Long): DataFrame = {
-    import graft.ext.{Dedup, HashDefs, QualityModel}
+    import graft.ext.{Dedup, HashDefs}
     val (slice, estBytes) = Dedup.checkpointPriced(fresh, textCol)(
       _.select(col(idCol), col(textCol),
         md5(col(textCol)).as("__digest"),
@@ -278,14 +295,10 @@ object IndexStore {
       slice.select(col(idCol).as("id"), col("__hs").as("hs")),
       small, minJaccard, maxBroadcastBytes)
     val hits = substrHits.union(fuzzyPairs.select(col("new_id").as("__hit")))
-    val weights = readNbWeightsMicro(spark, dir)
-    QualityModel.admitByModel(
-        slice
-          .join(sized(exactHits), Seq("__digest"), "left_anti")
-          .join(if (small && pairsFit) broadcast(hits) else hits,
-            col(idCol) === col("__hit"), "left_anti"),
-        weights, textCol)
-      .select(idCol)
+    slice
+      .join(sized(exactHits), Seq("__digest"), "left_anti")
+      .join(if (small && pairsFit) broadcast(hits) else hits,
+        col(idCol) === col("__hit"), "left_anti")
   }
 
   /** Incremental maintenance — the production ingest loop's other

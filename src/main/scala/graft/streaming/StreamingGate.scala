@@ -3,11 +3,15 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.{ArrayBuffer, HashMap}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.io.IndexStore
 
 /** Drives the STATEFUL streaming paths under the same hard oracle gate
   * as the batch registry: REAL Structured Streaming executions
@@ -42,6 +46,11 @@ import graft.Tables
   *   session. Sentinel rows are filtered from the output;
   * - therefore: emitted results = EXACTLY the batch formulation of the
   *   same query over the same events, which is the DuckDB oracle.
+  *
+  * Every gate is a short definition over ONE runner: [[runGate]] (stage
+  * dir + state partitions + cleanup), [[stagedStream]] (slices → file
+  * stream), [[drain]] (the only streaming query start in this file)
+  * and its two collectors, [[collected]] and [[latestByKey]].
   *
   * At 100 TB/day the same topologies run unbounded: the staging step
   * is replaced by the real landing directory, the sentinels by the
@@ -119,7 +128,7 @@ object StreamingGate {
     * micro-batch/trigger count — identical at every scale factor.
     */
   private def writeModSlices(df: DataFrame, idCol: String, stage: Path,
-      baseMs: Long, n: Int = 3): Unit = {
+      baseMs: Long, n: Int): Unit = {
     val tmp = stage.resolve("tmpmod")
     df.withColumn("__slice", pmod(col(idCol), lit(n)).cast("int"))
       .repartition(n, col("__slice"))
@@ -140,19 +149,27 @@ object StreamingGate {
     java.sql.Date.valueOf(lo.toLocalDate.plusDays(
       java.time.temporal.ChronoUnit.DAYS.between(lo.toLocalDate, hi.toLocalDate) / 2))
 
-  /** Stage `df` (must carry a `ts` timestamp column) into `stage/data`
-    * as event-time-ordered slice files: rows with `to_date(ts) <=
-    * cutoff` form slice 0, the rest slice 1 — so slice 0 is entirely
-    * earlier in EVENT TIME than slice 1 whatever calendar range the
-    * input spans. Returns the number of slice files written (1 when
-    * one side of the threshold is empty).
+  /** Stage `ev` (must carry a `ts` timestamp column) into `stage/data`
+    * as event-time-ordered slice files, then two sentinel slices. Rows
+    * with `to_date(ts) <= cutoff` (the midpoint date) form slice 0,
+    * the rest slice 1 — so slice 0 is entirely earlier in EVENT TIME
+    * than slice 1 whatever calendar range the input spans (one slice
+    * when one side of the threshold is empty). The sentinels are
+    * data-driven: `sentinel(t)` rows at max real ts + 1 year, then an
+    * hour later, so the final watermark closes every real session
+    * whatever range the input spans (month/year boundaries included).
     */
-  private def stageOrderedSlices(df: DataFrame, stage: Path, baseMs: Long,
-      cutoff: java.sql.Date, startIdx: Int = 0): Int = {
-    val tmp = stage.resolve(s"sliced$startIdx")
-    val orderCols = ("slice" +: "ts" +: df.columns.filterNot(_ == "ts").toSeq)
+  private def stageByEventTime(ev: DataFrame, stage: Path)(
+      sentinel: Timestamp => DataFrame): Unit = {
+    val baseMs = System.currentTimeMillis() - 3600000L
+    val bounds = ev.agg(
+      min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi"),
+      max(col("ts")).as("maxTs")).head()
+    val cutoff = midpointDate(bounds.getDate(0), bounds.getDate(1))
+    val tmp = stage.resolve("sliced")
+    val orderCols = ("slice" +: "ts" +: ev.columns.filterNot(_ == "ts").toSeq)
       .map(col)
-    df.withColumn("slice",
+    ev.withColumn("slice",
         when(to_date(col("ts")) <= lit(cutoff), 0).otherwise(1))
       .repartition(2, col("slice"))
       .sortWithinPartitions(orderCols: _*)
@@ -161,10 +178,15 @@ object StreamingGate {
       .filter(f => f.isDirectory && f.getName.startsWith("slice="))
       .sortBy(_.getName)
     sliceDirs.zipWithIndex.foreach { case (d, i) =>
-      promoteSlice(d, stage, startIdx + i, baseMs)
+      promoteSlice(d, stage, i, baseMs)
     }
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    sliceDirs.length
+    val farFuture = new Timestamp(
+      bounds.getTimestamp(2).getTime + 365L * 24 * 3600 * 1000)
+    Seq(farFuture, new Timestamp(farFuture.getTime + 3600000L))
+      .zipWithIndex.foreach { case (t, i) =>
+        writeSlice(sentinel(t), stage, sliceDirs.length + i, baseMs)
+      }
   }
 
   private def newStage(): Path = Files.createTempDirectory(
@@ -187,19 +209,126 @@ object StreamingGate {
         s"foreachBatch driver buffer exceeded $MaxDriverBufferRows rows — " +
           "use the parquet-sinked gate wiring for hot streams")
 
-  /** Superset schema for the SHARED staged slice set: every gate's
-    * input is a projection of it. `side` tags the join roles (`v` =
-    * view, `s` = search/click, `o` = other event types — the session/
-    * window/dedup gates consume all three).
+  /** Run `body` with `spark.sql.shuffle.partitions` = `n`, restoring
+    * the previous value after. Stateful streaming commits one state
+    * store PER shuffle partition PER micro-batch — at the gate's key
+    * cardinality (hundreds of contracts) 32 stores are pure commit
+    * overhead (measured 6.7 s → 3.8 s per run at 8). This is the
+    * deployment knob "size state partitions to key cardinality", made
+    * explicit; correctness is partition-count-invariant (hash
+    * aggregation), which the oracle gate itself re-proves every run.
     */
-  private val sharedStageSchema = StructType(Seq(
-    StructField("contract", StringType),
-    StructField("category", StringType),
-    StructField("duration", LongType),
-    StructField("keyword", StringType),
-    StructField("props", StringType),
-    StructField("ts", TimestampType),
-    StructField("side", StringType)))
+  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, n.toString)
+    try body finally s.conf.set(key, prev)
+  }
+
+  /** The gate runner's frame: a fresh stage dir (staged slices, the
+    * query checkpoint, any per-run store) for `body`, run under
+    * [[withStatePartitions]] 4. The stage is deleted however `body`
+    * ends, so a gate's returned frame must not read it: results are
+    * driver rows or `localCheckpoint`ed. Corpus-side work that ran
+    * before a gate's state partitions were set (memoized index
+    * builds, offline calibration) stays outside the call.
+    */
+  private[streaming] def runGate[T](s: SparkSession)(body: Path => T): T = {
+    val stage = newStage()
+    try withStatePartitions(s, 4)(body(stage))
+    finally org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+  }
+
+  /** The slices under `stage/data` as a file-source stream: one file
+    * per micro-batch, in modification-time order. `schema` is the
+    * staged frame's own, every field nullable (as a file source reads
+    * it anyway).
+    */
+  private def fileStream(s: SparkSession, stage: Path,
+      schema: StructType): DataFrame =
+    s.readStream
+      .schema(StructType(schema.map(_.copy(nullable = true))))
+      .option("maxFilesPerTrigger", 1)
+      .parquet(stage.resolve("data").toString)
+
+  /** Stage `frame` as `n` id-keyed slices ([[writeModSlices]]) and
+    * replay them as a file stream — the staging of every gate whose
+    * input carries no event time.
+    */
+  private[streaming] def stagedStream(s: SparkSession, stage: Path,
+      frame: DataFrame, idCol: String, n: Int = 3): DataFrame = {
+    writeModSlices(frame, idCol, stage, System.currentTimeMillis() - 3600000L, n)
+    fileStream(s, stage, frame.schema)
+  }
+
+  /** Run `out` to completion: every staged file is processed, each
+    * micro-batch handed to `onBatch` (sequentially, in batch order),
+    * the checkpoint kept under `stage`. The one streaming query start
+    * in this file; the query is stopped however the drain ends, and an
+    * `onBatch` failure surfaces from here.
+    */
+  private[streaming] def drain[T](stage: Path, out: Dataset[T],
+      mode: String = "append")(onBatch: (Dataset[T], Long) => Unit): Unit = {
+    val query = out.writeStream
+      .option("checkpointLocation", stage.resolve("ckpt").toString)
+      .outputMode(mode)
+      .foreachBatch(onBatch)
+      .start()
+    try query.processAllAvailable() finally query.stop()
+  }
+
+  /** Append `rows` to a driver buffer kept across micro-batches, under
+    * [[checkDriverBudget]].
+    */
+  private def buffered[A](buf: ArrayBuffer[A], rows: Array[A]): Unit =
+    buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
+
+  /** Every row `out` emits, as one driver-side frame with `out`'s
+    * schema — the oracle-harness collector (bounded: the staged
+    * fixtures are small; the sinked gate variants are the serving
+    * shape).
+    */
+  private[streaming] def collected(stage: Path, out: DataFrame): DataFrame = {
+    val buf = ArrayBuffer.empty[Row]
+    drain(stage, out)((batch, _) => buffered(buf, batch.collect()))
+    out.sparkSession.createDataFrame(buf.synchronized(buf.toList).asJava,
+      out.schema)
+  }
+
+  /** The LAST row `out` emitted per `key` in update mode — upserted
+    * batch by batch, exactly what a downstream serving table would
+    * hold. foreachBatch runs epochs sequentially, so last write wins
+    * in batch order.
+    */
+  private[streaming] def latestByKey(stage: Path, out: DataFrame,
+      key: String): DataFrame = {
+    val last = HashMap.empty[Any, Row]
+    drain(stage, out, "update") { (batch, _) =>
+      val rows = batch.collect()
+      last.synchronized {
+        rows.foreach(r => last(r.getAs[Any](key)) = r)
+        checkDriverBudget(last.size)
+      }
+    }
+    out.sparkSession.createDataFrame(
+      last.synchronized(last.values.toList).asJava, out.schema)
+  }
+
+  /** `df` without the rows the sentinel slices produced in column `c`
+    * (null-safe: a null key is real data and stays).
+    */
+  private def dropSentinel(df: DataFrame, c: String): DataFrame =
+    df.filter(!(col(c) <=> lit(Sentinel)))
+
+  /** The admission gates' split of `df`: the SEEN corpus (id bucket
+    * < 500 of 1000) and the FRESH slice that arrives as micro-batches
+    * (bucket 500–599). The faces' oracles replay the same buckets.
+    */
+  private def seenFresh(df: DataFrame,
+      idCol: String = "doc_id"): (DataFrame, DataFrame) = {
+    val bucket = graft.ext.TrainingData.splitBucket(col(idCol), 1000)
+    (df.filter(bucket < 500), df.filter(bucket >= 500 && bucket < 600))
+  }
 
   /** One staged slice set per events dir per JVM, shared by every
     * FromFiles gate. Staging was the gates' common fixed tax — a
@@ -217,9 +346,12 @@ object StreamingGate {
     * cheaper than re-staging. The staged files are inputs only
     * (checkpoints stay per-gate in their own temp dirs), so sharing
     * cannot couple gate state; a shutdown hook removes the files.
+    * Each entry keeps the stage and its superset schema: `side` tags
+    * the join roles (`v` = view, `s` = search/click, `o` = other
+    * event types — the session/window/dedup gates consume all three).
     */
   private val sharedStages =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Path, StructType)]()
 
   /** Cache key = dir + a listing fingerprint (relative path, size,
     * mtime of every file under events.parquet): if the dataset at
@@ -246,13 +378,12 @@ object StreamingGate {
     }
   }
 
-  private def sharedSlices(s: SparkSession, dir: String): Path =
+  private def sharedSlices(s: SparkSession, dir: String): (Path, StructType) =
     sharedStages.computeIfAbsent(s"$dir@${eventsFingerprint(dir)}", { _ =>
       import s.implicits._
       val stage = newStage()
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile): Unit))
-      val baseMs = System.currentTimeMillis() - 3600000L
       val tagged = Tables(s, dir, "events").select(
         col("user_id").cast("string").as("contract"),
         col("event_type").as("category"),
@@ -263,23 +394,11 @@ object StreamingGate {
         when(col("event_type") === "view", "v")
           .when(col("event_type") === "click", "s")
           .otherwise("o").as("side"))
-      val bounds = tagged.agg(
-        min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi"),
-        max(col("ts")).as("maxTs")).head()
-      val cutoff = midpointDate(bounds.getDate(0), bounds.getDate(1))
-      val nSlices = stageOrderedSlices(tagged, stage, baseMs, cutoff)
-      val farFuture = new Timestamp(
-        bounds.getTimestamp(2).getTime + 365L * 24 * 3600 * 1000)
-      val later = new Timestamp(farFuture.getTime + 3600000L)
-      Seq(farFuture, later).zipWithIndex.foreach { case (t, i) =>
-        writeSlice(Seq(
-            (Sentinel, "view", 0L, "0", Sentinel, t, "v"),
-            (Sentinel, "view", 0L, "0", Sentinel, t, "s"))
-          .toDF("contract", "category", "duration", "keyword",
-            "props", "ts", "side"),
-          stage, nSlices + i, baseMs)
-      }
-      stage
+      stageByEventTime(tagged, stage)(t => Seq(
+          (Sentinel, "view", 0L, "0", Sentinel, t, "v"),
+          (Sentinel, "view", 0L, "0", Sentinel, t, "s"))
+        .toDF(tagged.columns.toSeq: _*))
+      (stage, tagged.schema)
     })
 
   /** Build the shared slice set for `dir` eagerly (idempotent). A
@@ -294,33 +413,10 @@ object StreamingGate {
   /** The shared slice set as a file-source stream (one slice per
     * micro-batch, event-time ordered).
     */
-  private def sharedStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream
-      .schema(sharedStageSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sharedSlices(s, dir).resolve("data").toString)
-
-  /** Run `body` with `spark.sql.shuffle.partitions` = `n`, restoring
-    * the previous value after. Stateful streaming commits one state
-    * store PER shuffle partition PER micro-batch — at the gate's key
-    * cardinality (hundreds of contracts) 32 stores are pure commit
-    * overhead (measured 6.7 s → 3.8 s per run at 8). This is the
-    * deployment knob "size state partitions to key cardinality", made
-    * explicit; correctness is partition-count-invariant (hash
-    * aggregation), which the oracle gate itself re-proves every run.
-    */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+  private def sharedStream(s: SparkSession, dir: String): DataFrame = {
+    val (stage, schema) = sharedSlices(s, dir)
+    fileStream(s, stage, schema)
   }
-
-  private val sessionStageSchema = StructType(Seq(
-    StructField("contract", StringType),
-    StructField("category", StringType),
-    StructField("duration", LongType),
-    StructField("ts", TimestampType)))
 
   /** Sessionize arbitrary prepared events (contract, category,
     * duration, ts) through the real streaming stack and return the
@@ -330,64 +426,27 @@ object StreamingGate {
   def closedSessionsFromEvents(s: SparkSession, ev: DataFrame,
       gapMinutes: Int = 30, watermark: String = "1 hour",
       sessionize: (Dataset[Streaming.ViewEvent], Long, String) =>
-        Dataset[Streaming.SessionSummary] = Streaming.closedSessions(_, _, _)): DataFrame = {
-    import s.implicits._
-    val stage = newStage()
-    try withStatePartitions(s, 4) {
-      val baseMs = System.currentTimeMillis() - 3600000L
-      val bounds = ev.agg(
-        min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi"),
-        max(col("ts")).as("maxTs")).head()
-      val cutoff = midpointDate(bounds.getDate(0), bounds.getDate(1))
-      val nSlices = stageOrderedSlices(
-        ev.select("contract", "category", "duration", "ts"),
-        stage, baseMs, cutoff)
-      // Sentinels are data-driven: far past the latest real event, so
-      // the final watermark closes every real session whatever range
-      // the input spans (month/year boundaries included).
-      val farFuture = new Timestamp(
-        bounds.getTimestamp(2).getTime + 365L * 24 * 3600 * 1000)
-      val later = new Timestamp(farFuture.getTime + 3600000L)
-      Seq(farFuture, later).zipWithIndex.foreach { case (t, i) =>
-        writeSlice(Seq((Sentinel, "view", 0L, t))
-          .toDF("contract", "category", "duration", "ts"),
-          stage, nSlices + i, baseMs)
-      }
-
-      val stream = s.readStream
-        .schema(sessionStageSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      runSessionQuery(s, stream, stage, gapMinutes, watermark, sessionize)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+        Dataset[Streaming.SessionSummary] = Streaming.closedSessions(_, _, _)): DataFrame =
+    runGate(s) { stage =>
+      import s.implicits._
+      val staged = ev.select("contract", "category", "duration", "ts")
+      stageByEventTime(staged, stage)(t =>
+        Seq((Sentinel, "view", 0L, t)).toDF(staged.columns.toSeq: _*))
+      sessionRows(s, stage, fileStream(s, stage, staged.schema), gapMinutes,
+        watermark, sessionize)
     }
-  }
 
   /** Drive `sessionize` over a prepared event stream, collecting the
     * closed sessions (sentinel contracts filtered).
     */
-  private def runSessionQuery(s: SparkSession, stream: DataFrame,
-      ckptDir: Path, gapMinutes: Int, watermark: String,
+  private def sessionRows(s: SparkSession, stage: Path, stream: DataFrame,
+      gapMinutes: Int, watermark: String,
       sessionize: (Dataset[Streaming.ViewEvent], Long, String) =>
         Dataset[Streaming.SessionSummary]): DataFrame = {
     import s.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Streaming.SessionSummary]
-    val query = sessionize(stream.as[Streaming.ViewEvent],
-        gapMinutes * 60000L, watermark)
-      .writeStream
-      .option("checkpointLocation", ckptDir.resolve("ckpt").toString)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Streaming.SessionSummary], _: Long) =>
-        val rows = batch.collect()
-        buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-        () // the lambda must be (Dataset, Long) => Unit
-      }
-      .start()
-    query.processAllAvailable()
-    query.stop()
-
-    buf.synchronized { buf.filter(_.contract != Sentinel).toSeq }.toDS().toDF()
+    val sessions = sessionize(stream.as[Streaming.ViewEvent],
+      gapMinutes * 60000L, watermark)
+    dropSentinel(collected(stage, sessions.toDF()), "contract")
       .select(col("contract"), col("session_start"), col("session_end"),
         col("totalDuration").as("total_duration"), col("n_events"))
       .orderBy("contract", "session_start")
@@ -401,20 +460,16 @@ object StreamingGate {
   def closedSessionsFromFiles(s: SparkSession, dir: String,
       gapMinutes: Int = 30, watermark: String = "1 hour",
       sessionize: (Dataset[Streaming.ViewEvent], Long, String) =>
-        Dataset[Streaming.SessionSummary] = Streaming.closedSessions(_, _, _)): DataFrame = {
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
+        Dataset[Streaming.SessionSummary] = Streaming.closedSessions(_, _, _)): DataFrame =
+    runGate(s) { stage =>
       val stream = sharedStream(s, dir)
         .select("contract", "category", "duration", "ts")
-      runSessionQuery(s, stream, ckpt, gapMinutes, watermark, sessionize)
+      sessionRows(s, stage, stream, gapMinutes, watermark, sessionize)
         .select(col("contract").cast("long").as("user_id"),
           col("session_start"), col("session_end"),
           col("total_duration"), col("n_events"))
         .orderBy("user_id", "session_start")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
 
   /** [[closedSessionsFromFiles]] on the `transformWithState` session
     * machine ([[Streaming.closedSessionsTws]]): same staged slices,
@@ -436,13 +491,6 @@ object StreamingGate {
       sessionize = Streaming.closedSessionsTws(_, _, _))
   }
 
-  /** One emitted view↔search match (the collected join row). Public:
-    * the encoder's generated code constructs and reads it
-    * reflectively, so a `private` modifier breaks codegen.
-    */
-  final case class JoinedRow(contract: String, duration: Long,
-      view_ts: Timestamp, keyword: String, search_ts: Timestamp)
-
   /** STREAM-STREAM interval join under the gate: views (event_type =
     * 'view') joined to the searches (event_type = 'click', keyword =
     * the click's event id) the same user issued in the preceding
@@ -459,54 +507,24 @@ object StreamingGate {
     * which is the DuckDB oracle.
     */
   def searchJoinFromFiles(s: SparkSession, dir: String,
-      intervalMinutes: Int = 60, watermark: String = "1 hour"): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
+      intervalMinutes: Int = 60, watermark: String = "1 hour"): DataFrame =
+    runGate(s) { stage =>
       val stream = sharedStream(s, dir)
-      val views = stream.filter(col("side") === "v")
-        .select("contract", "category", "duration", "ts")
-      val searches = stream.filter(col("side") === "s")
-        .select("contract", "keyword", "ts")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[JoinedRow]
-      val query = Streaming.searchesBeforeView(views, searches,
+      val joined = Streaming.searchesBeforeView(
+          stream.filter(col("side") === "v")
+            .select("contract", "category", "duration", "ts"),
+          stream.filter(col("side") === "s").select("contract", "keyword", "ts"),
           interval = s"$intervalMinutes minutes", watermark = watermark)
-        .select(col("contract"), col("duration"), col("view_ts"),
-          col("keyword"), col("search_ts"))
-        .as[JoinedRow]
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[JoinedRow], _: Long) =>
-          val rows = batch.collect()
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+        .select("contract", "duration", "view_ts", "keyword", "search_ts")
       // the shared sentinels are same-timestamp v+s rows, so they
       // inner-join each other — drop them with the usual filter
-      buf.synchronized { buf.filter(_.contract != Sentinel).toSeq }
-        .toDS().toDF()
+      dropSentinel(collected(stage, joined), "contract")
         .select(col("contract").cast("long").as("user_id"),
           col("view_ts"), col("duration"),
           col("keyword").cast("long").as("search_event_id"),
           col("search_ts"))
         .orderBy("user_id", "view_ts", "search_event_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
-
-  /** One emitted left-outer join row (view side always present;
-    * keyword/search_ts null when no in-window search existed). Public
-    * for the encoder's generated code, like [[JoinedRow]].
-    */
-  final case class OuterJoinedRow(contract: String, view_id: String,
-      duration: Long, view_ts: Timestamp, keyword: String,
-      search_ts: Timestamp)
 
   /** STREAM-STREAM LEFT-OUTER interval join under the gate: a REAL
     * [[Streaming.searchesBeforeViewOuter]] run. Unlike the inner
@@ -516,12 +534,12 @@ object StreamingGate {
     * view's window (closing the outer state), and the sentinel's own
     * rows are filtered from the output. Emitted set = the batch LEFT
     * JOIN with the same interval predicate, which is the oracle.
+    * Each emitted row has its view side always present;
+    * keyword/search_ts are null when no in-window search existed.
     */
   def searchJoinOuterFromFiles(s: SparkSession, dir: String,
-      intervalMinutes: Int = 60, watermark: String = "1 hour"): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
+      intervalMinutes: Int = 60, watermark: String = "1 hour"): DataFrame =
+    runGate(s) { stage =>
       // keyword doubles as the generic event-id carrier on BOTH sides
       // of the shared stage: the view's own id on 'v' rows, the search
       // id on 's' rows. The shared sentinel slices carry both sides —
@@ -530,31 +548,15 @@ object StreamingGate {
       // searches branch (and with it the join's eviction watermark)
       // pinned at the real-data max.
       val stream = sharedStream(s, dir)
-      val views = stream.filter(col("side") === "v")
-        .select(col("contract"), col("keyword").as("view_id"),
-          col("duration"), col("ts"))
-      val searches = stream.filter(col("side") === "s")
-        .select("contract", "keyword", "ts")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[OuterJoinedRow]
-      val query = Streaming.searchesBeforeViewOuter(views, searches,
+      val joined = Streaming.searchesBeforeViewOuter(
+          stream.filter(col("side") === "v")
+            .select(col("contract"), col("keyword").as("view_id"),
+              col("duration"), col("ts")),
+          stream.filter(col("side") === "s").select("contract", "keyword", "ts"),
           interval = s"$intervalMinutes minutes", watermark = watermark)
-        .select(col("contract"), col("view_id"), col("duration"),
-          col("view_ts"), col("keyword"), col("search_ts"))
-        .as[OuterJoinedRow]
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[OuterJoinedRow], _: Long) =>
-          val rows = batch.collect()
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      buf.synchronized { buf.filter(_.contract != Sentinel).toSeq }
-        .toDS().toDF()
+        .select("contract", "view_id", "duration", "view_ts", "keyword",
+          "search_ts")
+      dropSentinel(collected(stage, joined), "contract")
         .select(col("contract").cast("long").as("user_id"),
           col("view_id").cast("long").as("view_event_id"),
           col("view_ts"), col("duration"),
@@ -562,10 +564,7 @@ object StreamingGate {
           col("search_ts"))
         .orderBy(col("user_id"), col("view_event_id"),
           coalesce(col("search_event_id"), lit(-1L)))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
 
   /** WINDOWED AGGREGATION under the gate: a REAL append-mode
     * [[Streaming.windowedCategoryStats]] run — the watermark must
@@ -577,43 +576,21 @@ object StreamingGate {
     */
   def windowStatsFromFiles(s: SparkSession, dir: String,
       windowDuration: String = "1 hour",
-      watermark: String = "1 hour"): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
-      val stream = sharedStream(s, dir)
-        .select("contract", "category", "duration", "ts")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[
-        (Timestamp, String, String, Long, Long)]
-      val query = Streaming.windowedCategoryStats(stream,
+      watermark: String = "1 hour"): DataFrame =
+    runGate(s) { stage =>
+      // append mode: only watermark-finalized windows emit
+      val windows = Streaming.windowedCategoryStats(
+          sharedStream(s, dir).select("contract", "category", "duration", "ts"),
           windowDuration = windowDuration, watermark = watermark)
         .select(col("window.start").as("window_start"), col("contract"),
-          col("category"), col("TotalDuration"), col("n_events"))
-        .as[(Timestamp, String, String, Long, Long)]
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("append") // only watermark-finalized windows emit
-        .foreachBatch {
-          (batch: Dataset[(Timestamp, String, String, Long, Long)], _: Long) =>
-            val rows = batch.collect()
-            buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-            ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      buf.synchronized { buf.filter(_._2 != Sentinel).toSeq }
-        .toDF("window_start", "contract", "category", "total_duration", "n_events")
+          col("category").as("event_type"),
+          col("TotalDuration").as("total_duration"), col("n_events"))
+      dropSentinel(collected(stage, windows), "contract")
         .select(col("window_start"),
           col("contract").cast("long").as("user_id"),
-          col("category").as("event_type"),
-          col("total_duration"), col("n_events"))
+          col("event_type"), col("total_duration"), col("n_events"))
         .orderBy("window_start", "user_id", "event_type")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
 
   /** STREAMING RATE-ANOMALY ADMISSION under the gate: a REAL
     * [[Streaming.rateAnomalies]] run over the staged event slices —
@@ -627,8 +604,6 @@ object StreamingGate {
   def streamAdmitRateFromFiles(s: SparkSession, dir: String,
       windowDuration: String = "1 hour",
       rateFactor: Double = 2.0, volFactor: Double = 2.0): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
     // offline calibration: the shipped-scalar thresholds are factor ×
     // the historical mean per-(window, source) event count AND data
     // volume — exact integer sums/counts then one division each, so
@@ -642,33 +617,26 @@ object StreamingGate {
       .agg(avg("c"), avg("d")).head()
     val threshold = rateFactor * stats.getDouble(0)
     val volThreshold = volFactor * stats.getDouble(1)
-    try withStatePartitions(s, 4) {
-      val stream = sharedStream(s, dir)
-        .select("contract", "category", "duration", "ts")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[
-        (Timestamp, String, Long, Long)]
-      val query = Streaming.rateAnomalies(stream, "category",
-          windowDuration, watermark = "1 hour", threshold, volThreshold)
-        .as[(Timestamp, String, Long, Long)]
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("append") // verdicts emit once, watermark-finalized
-        .foreachBatch { (batch: Dataset[(Timestamp, String, Long, Long)], _: Long) =>
-          val rows = batch.collect()
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      buf.synchronized { buf.toSeq }
-        .toDF("window_start", "event_type", "n_events", "total_duration")
+    runGate(s) { stage =>
+      // append mode: verdicts emit once, watermark-finalized
+      collected(stage, Streaming.rateAnomalies(
+          sharedStream(s, dir).select("contract", "category", "duration", "ts"),
+          "category", windowDuration, watermark = "1 hour", threshold,
+          volThreshold)
+        .withColumnRenamed("category", "event_type"))
         .orderBy("window_start", "event_type")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
   }
+
+  /** The enrich gate's category→weight dictionary — the ONE source
+    * the gate's dim frame, the spec's batch comparator, and the
+    * registry oracle's SQL VALUES list are all built from, so the
+    * three can't drift. "view" is deliberately present (sentinel
+    * category — filtered by contract, not by dictionary miss) and
+    * "error" deliberately absent (the miss-drop semantic under test).
+    */
+  val EnrichDict: Seq[(String, Long)] =
+    Seq(("signup", 3L), ("purchase", 10L), ("view", 1L), ("click", 2L))
 
   /** STREAM-STATIC ENRICH under the gate: a REAL
     * [[Streaming.streamStaticEnrich]] run — every micro-batch joins
@@ -681,56 +649,24 @@ object StreamingGate {
     * weighted sums are integer-exact (long × long), so the full
     * surface hashes cross-engine.
     */
-  /** The enrich gate's category→weight dictionary — the ONE source
-    * the gate's dim frame, the spec's batch comparator, and the
-    * registry oracle's SQL VALUES list are all built from, so the
-    * three can't drift. "view" is deliberately present (sentinel
-    * category — filtered by contract, not by dictionary miss) and
-    * "error" deliberately absent (the miss-drop semantic under test).
-    */
-  val EnrichDict: Seq[(String, Long)] =
-    Seq(("signup", 3L), ("purchase", 10L), ("view", 1L), ("click", 2L))
-
   def streamEnrichFromFiles(s: SparkSession, dir: String,
-      windowDuration: String = "1 hour"): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
-      val dim = EnrichDict.toDF("category", "weight")
-      val stream = sharedStream(s, dir)
-        .select("contract", "category", "duration", "ts")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[
-        (Timestamp, String, String, Long, Long)]
-      val query = Streaming.streamStaticEnrich(stream, dim,
+      windowDuration: String = "1 hour"): DataFrame =
+    runGate(s) { stage =>
+      import s.implicits._
+      // append mode: only watermark-finalized windows emit
+      val windows = Streaming.streamStaticEnrich(
+          sharedStream(s, dir).select("contract", "category", "duration", "ts"),
+          EnrichDict.toDF("category", "weight"),
           windowDuration = windowDuration)
         .select(col("window.start").as("window_start"), col("contract"),
-          col("category"), col("weighted_duration"), col("n_events"))
-        .as[(Timestamp, String, String, Long, Long)]
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("append") // only watermark-finalized windows emit
-        .foreachBatch {
-          (batch: Dataset[(Timestamp, String, String, Long, Long)], _: Long) =>
-            val rows = batch.collect()
-            buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-            ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      buf.synchronized { buf.filter(_._2 != Sentinel).toSeq }
-        .toDF("window_start", "contract", "category", "weighted_duration",
-          "n_events")
+          col("category").as("event_type"), col("weighted_duration"),
+          col("n_events"))
+      dropSentinel(collected(stage, windows), "contract")
         .select(col("window_start"),
           col("contract").cast("long").as("user_id"),
-          col("category").as("event_type"),
-          col("weighted_duration"), col("n_events"))
+          col("event_type"), col("weighted_duration"), col("n_events"))
         .orderBy("window_start", "user_id", "event_type")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
 
   /** STREAMING EXACT DEDUP under the gate: a REAL
     * [[Streaming.streamingExactDedup]] run over the staged slices.
@@ -744,35 +680,16 @@ object StreamingGate {
     * (the eviction tradeoff is spec-covered); the result must equal
     * the batch DISTINCT, which is the oracle.
     */
-  def streamDedupFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
-      val stream = sharedStream(s, dir).select("props", "ts")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      val query = Streaming.streamingExactDedup(stream, textCol = "props",
+  def streamDedupFromFiles(s: SparkSession, dir: String): DataFrame =
+    runGate(s) { stage =>
+      val kept = Streaming.streamingExactDedup(
+          sharedStream(s, dir).select("props", "ts"), textCol = "props",
           watermark = "3650 days")
-        .select("props").as[String]
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[String], _: Long) =>
-          val rows = batch.collect()
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+        .select("props")
       // the shared sentinels carry a synthetic props payload — not
       // part of the events DISTINCT the oracle computes
-      buf.synchronized { buf.filterNot(_ == Sentinel).toSeq }
-        .toDF("props").orderBy("props")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+      dropSentinel(collected(stage, kept), "props").orderBy("props")
     }
-  }
 
   /** STREAMING ADMISSION under the gate: a REAL
     * [[Streaming.streamAdmit]] run — the fresh documents slice
@@ -786,47 +703,18 @@ object StreamingGate {
     * carry no event time, so the shared event slices don't apply).
     */
   def streamAdmitFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{Dedup, TrainingData}
-    val stage = newStage()
-    try withStatePartitions(s, 4) {
-      val d = Tables(s, dir, "documents")
-      val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-      val seen = d.filter(bucket < 500)
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    runGate(s) { stage =>
       // three arrival batches, deterministic content (sorted single
       // files, increasing mtimes) — arrival order cannot affect the
       // admitted SET (stateless ops), the slicing just proves the
       // per-micro-batch path end-to-end
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val probe = Dedup.bloomProbeEager(seen, "text",
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
+      val probe = graft.ext.Dedup.bloomProbeEager(seen, "text",
         expectedSeen = 1000L, fpp = 0.01)
       val seenDigests = seen.select(md5(col("text")).as("digest")).distinct()
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = Streaming.streamAdmit(stream, seenDigests, probe)
-        .select("doc_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+      collected(stage, Streaming.streamAdmit(stream, seenDigests, probe)
+        .select("doc_id")).orderBy("doc_id")
     }
   }
 
@@ -842,47 +730,18 @@ object StreamingGate {
     * tables, pinning the write→read round trip.
     */
   def streamAdmitPersistedFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{QualityModel, TrainingData}
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val idxDir = graft.io.IndexStore.ensureAdmissionIndexes(
-      d.filter(bucket < 500), dir)
-    try withStatePartitions(s, 4) {
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val digests = graft.io.IndexStore.readDigests(s, idxDir)
-      val weights = graft.io.IndexStore.readNbWeightsMicro(s, idxDir)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = QualityModel.admitByModel(
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    val idxDir = IndexStore.ensureAdmissionIndexes(seen, dir)
+    runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
+      val digests = IndexStore.readDigests(s, idxDir)
+      val weights = IndexStore.readNbWeightsMicro(s, idxDir)
+      collected(stage, graft.ext.QualityModel.admitByModel(
           stream.withColumn("digest", md5(col("text")))
             .join(digests, Seq("digest"), "left_anti")
             .drop("digest"),
           weights)
-        .select("doc_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+        .select("doc_id")).orderBy("doc_id")
     }
   }
 
@@ -901,40 +760,36 @@ object StreamingGate {
     * the stream side (the STORE is the state), like every
     * maintenance job should be.
     */
-  def streamSketchMaintenanceFromFiles(s: SparkSession, dir: String): DataFrame = {
-    val stage = newStage()
-    val storeDir = stage.resolve("store").toString
-    try withStatePartitions(s, 4) {
-      val d = Tables(s, dir, "documents")
-        .select("doc_id", "source", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(d, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("source", StringType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId == 0L)
-            graft.io.IndexStore.writeSourceSketches(batch, storeDir)
-          else
-            graft.io.IndexStore.appendSourceSketches(batch, storeDir)
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      graft.ext.Dedup.sketchOverlapEst(
-          graft.io.IndexStore.readSourceSketches(s, storeDir))
+  def streamSketchMaintenanceFromFiles(s: SparkSession, dir: String): DataFrame =
+    runGate(s) { stage =>
+      val storeDir = stage.resolve("store").toString
+      val stream = stagedStream(s, stage,
+        Tables(s, dir, "documents").select("doc_id", "source", "text"), "doc_id")
+      drain(stage, stream) { (batch, batchId) =>
+        if (batchId == 0L) IndexStore.writeSourceSketches(batch, storeDir)
+        else IndexStore.appendSourceSketches(batch, storeDir)
+      }
+      graft.ext.Dedup.sketchOverlapEst(IndexStore.readSourceSketches(s, storeDir))
         .orderBy("source_a", "source_b")
         .localCheckpoint() // materialize before the stage dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+    }
+
+  /** Gopher structural-rules rung of the streaming admission ladder:
+    * each arriving micro-batch is filtered by the five
+    * language-agnostic Gopher rules
+    * ([[graft.ext.TextAnalysis.gopherStructuralPass]] — word count,
+    * mean word length, alpha fraction, symbol ratio, duplicate
+    * bigrams; the English stop-word prior stays out of an ingest
+    * gate). Stateless pure projection like the quality rung, so the
+    * admitted set must equal the batch replay bit-for-bit.
+    */
+  def streamAdmitGopherFromFiles(s: SparkSession, dir: String): DataFrame = {
+    val (_, fresh) = seenFresh(Tables(s, dir, "documents"))
+    runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
+      collected(stage, stream
+        .filter(graft.ext.TextAnalysis.gopherStructuralPass(col("text")))
+        .select("doc_id")).orderBy("doc_id")
     }
   }
 
@@ -951,89 +806,14 @@ object StreamingGate {
     * integer count surfaces, one rounded-to-micro llr per term, exact
     * BIGINT sums).
     */
-  /** Gopher structural-rules rung of the streaming admission ladder:
-    * each arriving micro-batch is filtered by the five
-    * language-agnostic Gopher rules
-    * ([[graft.ext.TextAnalysis.gopherStructuralPass]] — word count,
-    * mean word length, alpha fraction, symbol ratio, duplicate
-    * bigrams; the English stop-word prior stays out of an ingest
-    * gate). Stateless pure projection like the quality rung, so the
-    * admitted set must equal the batch replay bit-for-bit.
-    */
-  def streamAdmitGopherFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{TextAnalysis, TrainingData}
-    val stage = newStage()
-    try withStatePartitions(s, 4) {
-      val d = Tables(s, dir, "documents")
-      val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = stream
-        .filter(TextAnalysis.gopherStructuralPass(col("text")))
-        .select("doc_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-    }
-  }
-
   def streamAdmitQualityFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{QualityModel, TrainingData}
-    val stage = newStage()
-    try withStatePartitions(s, 4) {
-      val d = Tables(s, dir, "documents")
-      val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-      val seen = d.filter(bucket < 500)
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
+    import graft.ext.QualityModel
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
       val weights = QualityModel.nbWeightsMicro(seen, "doc_id", "text")
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = QualityModel.admitByModel(stream, weights)
-        .select("doc_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+      collected(stage, QualityModel.admitByModel(stream, weights)
+        .select("doc_id")).orderBy("doc_id")
     }
   }
 
@@ -1057,44 +837,17 @@ object StreamingGate {
     * pass stays a batch job over admitted documents.
     */
   def streamAdmitDsirFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{QualityModel, TrainingData}
-    val stage = newStage()
     val d = Tables(s, dir, "documents")
     val isTarget = col("source").isin("src0", "src1")
-    val idxDir = graft.io.IndexStore.ensureDsirWeights(
+    val idxDir = IndexStore.ensureDsirWeights(
       d.filter(!isTarget), d.filter(isTarget), dir, tag = "src01")
-    val weights = graft.io.IndexStore.readDsirWeightsMicro(s, idxDir)
-    try withStatePartitions(s, 4) {
-      val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = stream
-        .filter(QualityModel.nbScoreMicro(col("text"), weights) > 0)
-        .select("doc_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+    val weights = IndexStore.readDsirWeightsMicro(s, idxDir)
+    val (_, fresh) = seenFresh(d)
+    runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
+      collected(stage, stream
+        .filter(graft.ext.QualityModel.nbScoreMicro(col("text"), weights) > 0)
+        .select("doc_id")).orderBy("doc_id")
     }
   }
 
@@ -1111,50 +864,24 @@ object StreamingGate {
     * operator doc).
     */
   def streamAdmitFuzzyFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{Dedup, TrainingData}
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val seen = d.filter(bucket < 500)
+    import graft.ext.Dedup
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
     val sets = Dedup.docShingleSets(seen, "doc_id", "text").cache()
     val bandIndex = Dedup.lshBands(Dedup.minhashSignature(sets))
       .select(col("id").as("corpus_id"), col("band"), col("band_hash"))
       .cache()
     val corpusSets = sets
       .select(col("id").as("corpus_id"), col("hs").as("corpus_hs"))
-    try withStatePartitions(s, 4) {
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = Streaming.streamFuzzyHits(stream, bandIndex, corpusSets)
-        .select("new_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
+    try runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
       // a pair colliding in several bands emits per collision; the
       // gate contract is the fuzzy-hit doc SET
-      buf.synchronized { buf.distinct.toSeq }.toDF("doc_id").orderBy("doc_id")
+      collected(stage, Streaming.streamFuzzyHits(stream, bandIndex, corpusSets)
+          .select(col("new_id").as("doc_id")))
+        .distinct().orderBy("doc_id")
     } finally {
       sets.unpersist()
       bandIndex.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -1172,57 +899,29 @@ object StreamingGate {
     * hash-match.
     */
   def streamAdmitImageFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{Dedup, Multimodal, TrainingData}
-    import s.implicits._
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
+    import graft.ext.Multimodal
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
     // the corpus side serves from the PERSISTED fingerprint table
     // (io.IndexStore, built once per session+corpus): the expensive
     // codec pass never re-runs per gate — chunks explode row-locally
     // from 8-byte stored fingerprints
-    val idxDir = graft.io.IndexStore.ensureImageIndex(
-      Multimodal.synthPngMedia(d.filter(bucket < 500).select("doc_id")),
-      dir, variant = "-img-seen")
-    val corpusChunks = graft.io.IndexStore.readImageHashes(s, idxDir)
+    val idxDir = IndexStore.ensureImageIndex(
+      Multimodal.synthPngMedia(seen.select("doc_id")), dir, variant = "-img-seen")
+    val corpusChunks = IndexStore.readImageHashes(s, idxDir)
       .select(col("id").as("corpus_id"), col("dhash").as("corpus_fp"),
-        explode(Dedup.fpChunkArray(col("dhash"), 64, 3)).as("c"))
+        explode(graft.ext.Dedup.fpChunkArray(col("dhash"), 64, 3)).as("c"))
       .select(col("corpus_id"), col("corpus_fp"),
         col("c.chunk").as("chunk"), col("c.chunk_val").as("chunk_val"))
       .cache()
-    try withStatePartitions(s, 4) {
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
+    try runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
       val media = Multimodal.synthPngMedia(stream.select("doc_id"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = Streaming.streamImageHits(media, corpusChunks)
-        .select("new_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
       // a pair agreeing on several chunks emits per agreement; the
       // gate contract is the image-hit doc SET
-      buf.synchronized { buf.distinct.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      corpusChunks.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-    }
+      collected(stage, Streaming.streamImageHits(media, corpusChunks)
+          .select(col("new_id").as("doc_id")))
+        .distinct().orderBy("doc_id")
+    } finally corpusChunks.unpersist()
   }
 
   /** STREAMING SUBSTRING ADMISSION under the gate: a REAL
@@ -1239,44 +938,15 @@ object StreamingGate {
     * 8-word window with the corpus"), which is the DuckDB oracle.
     */
   def streamAdmitSubstringFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.TrainingData
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val idxDir = graft.io.IndexStore.ensureAdmissionIndexes(
-      d.filter(bucket < 500), dir)
-    val corpusSpans = graft.io.IndexStore.readSpanHashes(s, idxDir).cache()
-    try withStatePartitions(s, 4) {
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = Streaming.streamSubstringHits(stream, corpusSpans)
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    val idxDir = IndexStore.ensureAdmissionIndexes(seen, dir)
+    val corpusSpans = IndexStore.readSpanHashes(s, idxDir).cache()
+    try runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text"), "doc_id")
       // one emit per matching window; the gate contract is the SET
-      buf.synchronized { buf.distinct.toSeq }.toDF("doc_id").orderBy("doc_id")
-    } finally {
-      corpusSpans.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-    }
+      collected(stage, Streaming.streamSubstringHits(stream, corpusSpans))
+        .distinct().orderBy("doc_id")
+    } finally corpusSpans.unpersist()
   }
 
   /** STREAMING PARAGRAPH ADMISSION under the gate: a REAL
@@ -1297,63 +967,37 @@ object StreamingGate {
     * stays in the output at n_kept = 0.
     */
   def streamAdmitParagraphFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.TrainingData
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val synth = d.select(col("doc_id"),
-      paragraphSynthText(col("doc_id"), col("text")).as("text"))
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents").select(col("doc_id"),
+      paragraphSynthText(col("doc_id"), col("text")).as("text")))
     // "-para-seen": the memo keys on (corpusDir, variant) and this is
     // a SYNTHETIC face (boilerplate-augmented, bucket<500 slice) of
     // the corpus dir — the default "-para" stays free for plain-corpus
     // callers (the "-img-seen"/"-ann-seen" convention of the sibling
     // gates)
-    val idxDir = graft.io.IndexStore.ensureParagraphIndex(
-      synth.filter(bucket < 500), dir, variant = "-para-seen")
-    val corpusParas = graft.io.IndexStore.readParagraphHashes(s, idxDir).cache()
-    try withStatePartitions(s, 4) {
-      val fresh = synth.filter(bucket >= 500 && bucket < 600)
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, String)]
-      val query = Streaming.streamParagraphSurvivors(stream, corpusParas)
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      val kept = buf.synchronized { buf.toSeq }.toDF("id", "idx", "para")
-      val rebuilt = graft.ext.Dedup.reassembleParagraphs(kept)
-        .withColumnRenamed("id", "doc_id")
+    val idxDir = IndexStore.ensureParagraphIndex(seen, dir, variant = "-para-seen")
+    val corpusParas = IndexStore.readParagraphHashes(s, idxDir).cache()
+    try runGate(s) { stage =>
+      val kept = collected(stage, Streaming.streamParagraphSurvivors(
+        stagedStream(s, stage, fresh, "doc_id"), corpusParas))
       // per-doc totals ROW-LOCALLY from the same slice under the same
       // split rule — fully-stripped docs must still emit their row
-      val totals = fresh.select(col("doc_id"),
-          graft.ext.Dedup.paragraphCount(col("text")).cast("long").as("n_paras"))
-        .filter(col("n_paras") > 0)
-      totals.join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("clean_text"), lit("")).as("clean_text"),
-          col("n_paras"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"))
+      graft.ext.Dedup.reassembleWithTotals(fresh, "doc_id", "text",
+          kept.withColumnRenamed("doc_id", "id"))
         .orderBy("doc_id")
-    } finally {
-      corpusParas.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-    }
+    } finally corpusParas.unpersist()
+  }
+
+  /** A stripped document row (doc_id, clean_text, n_paras, n_kept) —
+    * the output contract of [[graft.ext.Dedup.stripSeenParagraphs]]
+    * and its fuzzy twin — for the gates that buffer it per batch.
+    */
+  private def strippedRow(r: Row): (Long, String, Long, Long) =
+    (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
+
+  private def strippedFrame(s: SparkSession,
+      rows: Seq[(Long, String, Long, Long)]): DataFrame = {
+    import s.implicits._
+    rows.toDF("doc_id", "clean_text", "n_paras", "n_kept")
   }
 
   /** The FUZZY paragraph rung under the gate — the admission hole
@@ -1380,58 +1024,31 @@ object StreamingGate {
     */
   def streamAdmitParagraphFuzzyFromFiles(s: SparkSession,
       dir: String): DataFrame = {
-    import graft.ext.{Dedup, TrainingData}
-    val stage = newStage()
     val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    def footer(edition: Column): Column = concat(
-      lit("subscribe to the graft newsletter and get the weekly " +
-        "brief of the best new items in edition "),
-      edition.cast("string"))
     def synth(edition: Column): DataFrame = d.select(col("doc_id"),
       concat_ws("\n\n",
         paragraphSynthText(col("doc_id"), col("text")),
-        footer(edition)).as("text"))
-    val idxDir = graft.io.IndexStore.ensureParagraphFuzzyIndex(
-      synth(col("doc_id") % 4).filter(bucket < 500), dir)
-    val paraHashes = graft.io.IndexStore.readParagraphHashes(s, idxDir).cache()
-    val paraBands = graft.io.IndexStore.readParagraphBands(s, idxDir).cache()
-    val paraShingles = graft.io.IndexStore.readParagraphShingles(s, idxDir)
-    try withStatePartitions(s, 4) {
-      val fresh = synth(col("doc_id") % 4 + 4)
-        .filter(bucket >= 500 && bucket < 600)
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = Dedup.stripFuzzySeenParagraphs(batch,
-              paraHashes, paraBands, paraShingles, "doc_id", "text")
-            .collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }
-        .toDF("doc_id", "clean_text", "n_paras", "n_kept")
-        .orderBy("doc_id")
+        concat(lit("subscribe to the graft newsletter and get the weekly " +
+          "brief of the best new items in edition "),
+          edition.cast("string"))).as("text"))
+    val idxDir = IndexStore.ensureParagraphFuzzyIndex(
+      seenFresh(synth(col("doc_id") % 4))._1, dir)
+    val paraHashes = IndexStore.readParagraphHashes(s, idxDir).cache()
+    val paraBands = IndexStore.readParagraphBands(s, idxDir).cache()
+    val paraShingles = IndexStore.readParagraphShingles(s, idxDir)
+    try runGate(s) { stage =>
+      val stream = stagedStream(s, stage,
+        seenFresh(synth(col("doc_id") % 4 + 4))._2, "doc_id")
+      val buf = ArrayBuffer.empty[(Long, String, Long, Long)]
+      drain(stage, stream) { (batch, _) =>
+        buffered(buf, graft.ext.Dedup.stripFuzzySeenParagraphs(batch,
+            paraHashes, paraBands, paraShingles, "doc_id", "text")
+          .collect().map(strippedRow))
+      }
+      strippedFrame(s, buf.synchronized(buf.toSeq)).orderBy("doc_id")
     } finally {
       paraHashes.unpersist()
       paraBands.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -1458,20 +1075,10 @@ object StreamingGate {
     */
   def streamAdmitParagraphFuzzyCumulativeFromFiles(s: SparkSession,
       dir: String): DataFrame = {
-    val buf =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
+    val buf = ArrayBuffer.empty[(Long, String, Long, Long)]
     paragraphFuzzyCumulativeRun(s, dir,
-      emitKept = (kept, _) => {
-        val rows = kept.collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-        ()
-      },
-      keptAfterDrain = () => {
-        import s.implicits._
-        buf.synchronized { buf.toSeq }
-          .toDF("doc_id", "clean_text", "n_paras", "n_kept")
-      })
+      emitKept = (kept, _) => buffered(buf, kept.collect().map(strippedRow)),
+      keptAfterDrain = () => strippedFrame(s, buf.synchronized(buf.toSeq)))
   }
 
   /** PRODUCTION-shaped twin of
@@ -1519,11 +1126,7 @@ object StreamingGate {
         if (sink.hasData)
           s.read.parquet(sinkDir)
             .select("doc_id", "clean_text", "n_paras", "n_kept")
-        else {
-          import s.implicits._
-          Seq.empty[(Long, String, Long, Long)]
-            .toDF("doc_id", "clean_text", "n_paras", "n_kept")
-        })
+        else strippedFrame(s, Nil))
   }
 
   /** Shared core of the two cumulative FUZZY paragraph gates — the
@@ -1543,59 +1146,38 @@ object StreamingGate {
       emitKept: (DataFrame, Long) => Unit,
       keptAfterDrain: () => DataFrame,
       compactEvery: Int = 0): DataFrame = {
-    import graft.ext.{Dedup, TrainingData}
-    val stage = newStage()
-    val storeDir = stage.resolve("store").toString
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    // a FRESH store per run — appends mutate it, so the session memo
-    // must not own this directory (the paragraphCumulativeRun rule)
-    graft.io.IndexStore.writeParagraphFuzzyIndex(
-      d.filter(bucket < 500).select(col("doc_id"),
-        paragraphSynthText(col("doc_id"), col("text")).as("text")),
-      storeDir)
-    try withStatePartitions(s, 4) {
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select(col("doc_id"),
-          concat_ws("\n\n",
-            paragraphSynthText(col("doc_id"), col("text")),
-            concat(lit("weekly digest of the graft data engineering " +
-              "news and updates for paying subscribers in issue "),
-              (col("doc_id") % 5).cast("string"))).as("text"))
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // eager checkpoint: materialize the strip against the
-          // PRE-append store; only then may the append advance it
-          val kept = Dedup.stripFuzzySeenParagraphs(batch,
-              graft.io.IndexStore.readParagraphHashes(s, storeDir),
-              graft.io.IndexStore.readParagraphBands(s, storeDir),
-              graft.io.IndexStore.readParagraphShingles(s, storeDir),
-              "doc_id", "text")
-            .localCheckpoint()
-          emitKept(kept, batchId)
-          graft.io.IndexStore.appendParagraphFuzzyIndex(batch, storeDir)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.io.IndexStore.compactParagraphFuzzyIndex(s, storeDir)
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    runGate(s) { stage =>
+      val storeDir = stage.resolve("store").toString
+      // a FRESH store per run — appends mutate it, so the session memo
+      // must not own this directory (the paragraphCumulativeRun rule)
+      IndexStore.writeParagraphFuzzyIndex(
+        seen.select(col("doc_id"),
+          paragraphSynthText(col("doc_id"), col("text")).as("text")),
+        storeDir)
+      val stream = stagedStream(s, stage, fresh.select(col("doc_id"),
+        concat_ws("\n\n",
+          paragraphSynthText(col("doc_id"), col("text")),
+          concat(lit("weekly digest of the graft data engineering " +
+            "news and updates for paying subscribers in issue "),
+            (col("doc_id") % 5).cast("string"))).as("text")), "doc_id")
+      drain(stage, stream) { (batch, batchId) =>
+        // eager checkpoint: materialize the strip against the
+        // PRE-append store; only then may the append advance it
+        val kept = graft.ext.Dedup.stripFuzzySeenParagraphs(batch,
+            IndexStore.readParagraphHashes(s, storeDir),
+            IndexStore.readParagraphBands(s, storeDir),
+            IndexStore.readParagraphShingles(s, storeDir),
+            "doc_id", "text")
+          .localCheckpoint()
+        emitKept(kept, batchId)
+        IndexStore.appendParagraphFuzzyIndex(batch, storeDir)
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          IndexStore.compactParagraphFuzzyIndex(s, storeDir)
+      }
       keptAfterDrain()
         .orderBy("doc_id")
         .localCheckpoint() // materialize before the stage dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -1613,53 +1195,24 @@ object StreamingGate {
     * twin q_embed_neardup_lsh uses).
     */
   def streamAdmitEmbedFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{Similarity, TrainingData}
     import graft.functions.LshFunctions.lsh_buckets
-    val stage = newStage()
-    val e = Tables(s, dir, "embeddings")
-    val bucket = TrainingData.splitBucket(col("vec_id"), 1000)
-    val corpus = Similarity.withNorm(
-      e.filter(bucket < 500).select(col("vec_id"), col("embedding").as("vec")))
+    val (seen, fresh) = seenFresh(Tables(s, dir, "embeddings"), "vec_id")
+    val corpus = graft.ext.Similarity.withNorm(
+      seen.select(col("vec_id"), col("embedding").as("vec")))
     val bucketIndex = corpus.select(col("vec_id").as("corpus_id"),
         posexplode(lsh_buckets(col("vec"), 6, 8, 64))
           .as(Seq("table", "bucket")))
       .cache()
     val corpusVecs = corpus.select(col("vec_id").as("corpus_id"),
       col("vec").as("cvec"), col("norm").as("cnorm"))
-    try withStatePartitions(s, 4) {
-      val fresh = e.filter(bucket >= 500 && bucket < 600)
-        .select("vec_id", "embedding")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "vec_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = Streaming.streamEmbedHits(stream, bucketIndex, corpusVecs,
-          minCos = 0.35)
-        .select("new_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
+    try runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("vec_id", "embedding"),
+        "vec_id")
       // one emit per table collision; the gate contract is the SET
-      buf.synchronized { buf.distinct.toSeq }.toDF("vec_id").orderBy("vec_id")
-    } finally {
-      bucketIndex.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-    }
+      collected(stage, Streaming.streamEmbedHits(stream, bucketIndex, corpusVecs,
+          minCos = 0.35).select(col("new_id").as("vec_id")))
+        .distinct().orderBy("vec_id")
+    } finally bucketIndex.unpersist()
   }
 
   /** STREAMING EMBEDDING ADMISSION FROM THE PERSISTED ANN STORE —
@@ -1679,55 +1232,28 @@ object StreamingGate {
     * LSH gives table-OR recall without training anything.
     */
   def streamAdmitEmbedPersistedFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{Similarity, TrainingData}
+    import graft.ext.Similarity
     import graft.functions.IvfFunctions.ivf_cells
-    val stage = newStage()
-    val e = Tables(s, dir, "embeddings")
-    val bucket = TrainingData.splitBucket(col("vec_id"), 1000)
-    val idxDir = graft.io.IndexStore.ensureAnnIndexes(
-      e.filter(bucket < 500).select("vec_id", "embedding"), dir,
-      variant = "-ann-seen")
-    val cents = graft.io.IndexStore.readAnnCentroids(s, idxDir)
-    val assigned = graft.io.IndexStore.readIvfAssigned(s, idxDir)
+    val (seen, fresh) = seenFresh(Tables(s, dir, "embeddings"), "vec_id")
+    val idxDir = IndexStore.ensureAnnIndexes(
+      seen.select("vec_id", "embedding"), dir, variant = "-ann-seen")
+    val cents = IndexStore.readAnnCentroids(s, idxDir)
+    val assigned = IndexStore.readIvfAssigned(s, idxDir)
       .select(col("id").as("corpus_id"), col("cell"),
         col("vec").as("cvec"), col("norm").as("cnorm"))
-    try withStatePartitions(s, 4) {
-      val fresh = e.filter(bucket >= 500 && bucket < 600)
-        .select("vec_id", "embedding")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "vec_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
+    runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("vec_id", "embedding"),
+        "vec_id")
       val probed = Similarity.withNorm(
           stream.select(col("vec_id"), col("embedding").as("vec")))
         .withColumn("cell", explode(ivf_cells(col("vec"), cents, 2)))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val query = probed.join(assigned, Seq("cell"))
-        .filter(Similarity.cosineFromNorms(col("vec"), col("cvec"),
-          col("norm"), col("cnorm")) >= 0.35)
-        .select("vec_id")
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(_.getLong(0))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
       // one emit per (probed cell, stored vector) hit; the gate
       // contract is the flagged vector SET
-      buf.synchronized { buf.distinct.toSeq }.toDF("vec_id").orderBy("vec_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+      collected(stage, probed.join(assigned, Seq("cell"))
+          .filter(Similarity.cosineFromNorms(col("vec"), col("cvec"),
+            col("norm"), col("cnorm")) >= 0.35)
+          .select("vec_id"))
+        .distinct().orderBy("vec_id")
     }
   }
 
@@ -1760,17 +1286,13 @@ object StreamingGate {
     */
   def streamAdmitParagraphCumulativeFromFiles(s: SparkSession,
       dir: String): DataFrame = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, String)]
+    val buf = ArrayBuffer.empty[(Long, Int, String)]
     paragraphCumulativeRun(s, dir,
-      emitKept = (kept, _) => {
-        val rows = kept.collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getString(2)))
-        buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-        ()
-      },
+      emitKept = (kept, _) => buffered(buf, kept.collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getString(2)))),
       keptAfterDrain = () => {
         import s.implicits._
-        buf.synchronized { buf.toSeq }.toDF("id", "idx", "para")
+        buf.synchronized(buf.toSeq).toDF("id", "idx", "para")
       })
   }
 
@@ -1829,59 +1351,37 @@ object StreamingGate {
   private def paragraphCumulativeRun(s: SparkSession, dir: String,
       emitKept: (DataFrame, Long) => Unit,
       keptAfterDrain: () => DataFrame): DataFrame = {
-    import graft.ext.{Dedup, TextAnalysis, TrainingData}
-    val stage = newStage()
-    val storeDir = stage.resolve("store").toString
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val synth = d.select(col("doc_id"),
-      paragraphSynthText(col("doc_id"), col("text")).as("text"))
+    import graft.ext.Dedup
+    val (seen, synthFresh) = seenFresh(Tables(s, dir, "documents").select(
+      col("doc_id"), paragraphSynthText(col("doc_id"), col("text")).as("text")))
     // fresh docs gain the 7-variant digest footer the corpus lacks —
     // the cross-batch duplication this face exists to exercise
-    val fresh = synth.filter(bucket >= 500 && bucket < 600)
-      .select(col("doc_id"),
-        concat_ws("\n\n", col("text"),
-          concat(lit("weekly digest issue "),
-            (col("doc_id") % 7).cast("string"))).as("text"))
-    // a FRESH store per run — appends mutate it, so the session memo
-    // (ensureParagraphIndex) must not own this directory
-    graft.io.IndexStore.writeParagraphIndex(
-      synth.filter(bucket < 500), storeDir)
-    try withStatePartitions(s, 4) {
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val store = graft.io.IndexStore.readParagraphHashes(s, storeDir)
-          // eager checkpoint: materialize the anti-join against the
-          // PRE-append store before the append below mutates it
-          val kept = Dedup.paragraphRows(batch, "doc_id", "text")
-            .withColumn("h", TextAnalysis.tokenHash60(col("para")))
-            .join(store, Seq("h"), "left_anti")
-            .select("id", "idx", "para")
-            .localCheckpoint()
-          emitKept(kept, batchId)
-          // the admitted batch is now corpus: its paragraphs join the
-          // store BEFORE the next batch's anti-join reads it
-          graft.io.IndexStore.appendParagraphIndex(batch, storeDir)
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+    val fresh = synthFresh.select(col("doc_id"),
+      concat_ws("\n\n", col("text"),
+        concat(lit("weekly digest issue "),
+          (col("doc_id") % 7).cast("string"))).as("text"))
+    runGate(s) { stage =>
+      val storeDir = stage.resolve("store").toString
+      // a FRESH store per run — appends mutate it, so the session memo
+      // (ensureParagraphIndex) must not own this directory
+      IndexStore.writeParagraphIndex(seen, storeDir)
+      drain(stage, stagedStream(s, stage, fresh, "doc_id")) { (batch, batchId) =>
+        val store = IndexStore.readParagraphHashes(s, storeDir)
+        // eager checkpoint: materialize the anti-join against the
+        // PRE-append store before the append below mutates it
+        val kept = Dedup.paragraphRows(batch, "doc_id", "text")
+          .withColumn("h", graft.ext.TextAnalysis.tokenHash60(col("para")))
+          .join(store, Seq("h"), "left_anti")
+          .select("id", "idx", "para")
+          .localCheckpoint()
+        emitKept(kept, batchId)
+        // the admitted batch is now corpus: its paragraphs join the
+        // store BEFORE the next batch's anti-join reads it
+        IndexStore.appendParagraphIndex(batch, storeDir)
+      }
       Dedup.reassembleWithTotals(fresh, "doc_id", "text", keptAfterDrain())
         .orderBy("doc_id")
         .localCheckpoint() // materialize before the stage dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -1889,123 +1389,81 @@ object StreamingGate {
     * pipeline (`q_admit_full_paragraph`'s semantics) run as a REAL
     * stream with every static side a PERSISTED artifact: arriving
     * docs are judged at DOC grain against the admission store's
-    * digest / span-hash / band+shingle tables
-    * ([[graft.io.IndexStore.readDigests]] etc. — the corpus is never
-    * touched at admit time) plus the in-plan corpus-half LSH index
-    * for the embedding rung (cached once, reused by every batch —
-    * the vector travels WITH the doc row, staged by one static join,
-    * so the rung is a batch-local probe), and each batch's ADMITTED
-    * docs are then stripped of already-seen paragraphs against the
-    * persisted paragraph store (variant "-para-seen", the synth
-    * boilerplate corpus the paragraph gates share) and reassembled.
-    * All five static sides are FROZEN for the run, so the admitted
-    * set is independent of the batch split and the gate shares the
-    * batch face's oracle — the composition, not any one rung, is
-    * what this face pins (each rung's own gate already exists).
+    * digest / span-hash / band+shingle tables — the exact, substring
+    * and fuzzy rungs are [[graft.io.IndexStore.novelFromIndexes]],
+    * the very plan the batch admission serves ([[graft.io.IndexStore.admitFromIndexes]]),
+    * so the corpus is never touched at admit time — plus the in-plan
+    * corpus-half LSH index for the embedding rung (cached once, reused
+    * by every batch — the vector travels WITH the doc row, staged by
+    * one static join, so the rung is a batch-local probe), and each
+    * batch's ADMITTED docs are then stripped of already-seen
+    * paragraphs against the persisted paragraph store (variant
+    * "-para-seen", the synth boilerplate corpus the paragraph gates
+    * share) and reassembled. All five static sides are FROZEN for the
+    * run, so the admitted set is independent of the batch split and
+    * the gate shares the batch face's oracle — the composition, not
+    * any one rung, is what this face pins (each rung's own gate
+    * already exists).
     */
   def streamAdmitFullParagraphFromFiles(s: SparkSession,
       dir: String): DataFrame = {
-    import graft.ext.{Dedup, Similarity, TrainingData}
+    import graft.ext.{Dedup, HashDefs, Similarity}
     import graft.functions.LshFunctions.lsh_buckets
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val idxDir = graft.io.IndexStore.ensureAdmissionIndexes(
-      d.filter(bucket < 500), dir)
-    val paraDir = graft.io.IndexStore.ensureParagraphIndex(
-      d.filter(bucket < 500)
-        .select(col("doc_id"),
-          paragraphSynthText(col("doc_id"), col("text")).as("text")),
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    val idxDir = IndexStore.ensureAdmissionIndexes(seen, dir)
+    val paraDir = IndexStore.ensureParagraphIndex(
+      seen.select(col("doc_id"),
+        paragraphSynthText(col("doc_id"), col("text")).as("text")),
       dir, variant = "-para-seen")
     // corpus half of the embedding rung's LSH index (q_admit_full's
     // parameters), cached across batches — ~vec count rows of
     // (id, table, bucket) + the norm'd vectors for the verify
     val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
-    val ebucket = TrainingData.splitBucket(col("vec_id"), 1000)
-    val cN = Similarity.withNorm(e.filter(ebucket < 500)
+    val cN = Similarity.withNorm(seenFresh(e, "vec_id")._1
       .select(col("vec_id"), col("embedding").as("vec"))).cache()
     val cIdx = cN.select(col("vec_id"),
       posexplode(lsh_buckets(col("vec"), 6, 8, 64)).as(Seq("tbl", "bucket")))
       .cache()
-    try withStatePartitions(s, 4) {
+    try runGate(s) { stage =>
       // the vector rides the staged row (one static equi-join at
       // staging time) — an arriving doc carries everything its
       // admission needs, the stream-enrich convention
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "text")
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "text")
         .join(e.select(col("vec_id").as("doc_id"), col("embedding")),
-          Seq("doc_id"), "left")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val digests = graft.io.IndexStore.readDigests(s, idxDir)
-      val spans = graft.io.IndexStore.readSpanHashes(s, idxDir)
-      val bandIdx = graft.io.IndexStore.readBandIndex(s, idxDir)
-      val shingles = graft.io.IndexStore.readShingleSets(s, idxDir)
-      val paraHashes = graft.io.IndexStore.readParagraphHashes(s, paraDir)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val buf =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val exactNovel = batch.withColumn("digest", md5(col("text")))
-            .join(digests, Seq("digest"), "left_anti")
-            .drop("digest")
-          val substrHits = Dedup.spanHashIndex(batch, "doc_id", "text", 8)
-            .join(spans, Seq("h"), "left_semi")
-            .select(col("id").as("doc_id")).distinct()
-          val fuzzyHits = Dedup.minhashCrossPairsFromIndex(
-              bandIdx, shingles, batch, "doc_id", "text")
-            .select(col("new_id").as("doc_id")).distinct()
-          val nN = Similarity.withNorm(
+          Seq("doc_id"), "left"), "doc_id")
+      val paraHashes = IndexStore.readParagraphHashes(s, paraDir)
+      val buf = ArrayBuffer.empty[(Long, String, Long, Long)]
+      drain(stage, stream) { (batch, _) =>
+        val novel = IndexStore.novelFromIndexes(batch, s, idxDir, "doc_id",
+          "text", 8, 0.5, HashDefs.CrossBroadcastMaxBytes)
+        // hits feed an anti-join, which is set-semantic: no distinct
+        val embHits = Similarity.withNorm(
             batch.filter(col("embedding").isNotNull)
               .select(col("doc_id"), col("embedding").as("vec")))
-          val embHits = nN
-            .select(col("doc_id"), col("vec"), col("norm"),
-              posexplode(lsh_buckets(col("vec"), 6, 8, 64))
-                .as(Seq("tbl", "bucket")))
-            .join(cIdx.withColumnRenamed("vec_id", "cid"),
-              Seq("tbl", "bucket"))
-            .filter(col("doc_id") =!= col("cid"))
-            .select("doc_id", "cid", "vec", "norm").distinct()
-            .join(cN.select(col("vec_id").as("cid"), col("vec").as("cv"),
-              col("norm").as("cn")), Seq("cid"))
-            .filter(Similarity.cosineFromNorms(
-              col("vec"), col("cv"), col("norm"), col("cn")) >= 0.35)
-            .select("doc_id").distinct()
-          val admitted = exactNovel
-            .join(substrHits, Seq("doc_id"), "left_anti")
-            .join(fuzzyHits, Seq("doc_id"), "left_anti")
-            .join(embHits, Seq("doc_id"), "left_anti")
-            .select("doc_id")
-          val rows = Dedup.stripSeenParagraphs(
-              batch.select(col("doc_id"),
-                  paragraphSynthText(col("doc_id"), col("text")).as("text"))
-                .join(admitted, Seq("doc_id"), "left_semi"),
-              paraHashes, "doc_id", "text")
-            .collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-          buf.synchronized { buf ++= rows; checkDriverBudget(buf.length) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      buf.synchronized { buf.toSeq }
-        .toDF("doc_id", "clean_text", "n_paras", "n_kept")
-        .orderBy("doc_id")
+          .select(col("doc_id"), col("vec"), col("norm"),
+            posexplode(lsh_buckets(col("vec"), 6, 8, 64))
+              .as(Seq("tbl", "bucket")))
+          .join(cIdx.withColumnRenamed("vec_id", "cid"), Seq("tbl", "bucket"))
+          .filter(col("doc_id") =!= col("cid"))
+          .select("doc_id", "cid", "vec", "norm").distinct()
+          .join(cN.select(col("vec_id").as("cid"), col("vec").as("cv"),
+            col("norm").as("cn")), Seq("cid"))
+          .filter(Similarity.cosineFromNorms(
+            col("vec"), col("cv"), col("norm"), col("cn")) >= 0.35)
+          .select("doc_id")
+        val admitted = novel.select("doc_id")
+          .join(embHits, Seq("doc_id"), "left_anti")
+        buffered(buf, Dedup.stripSeenParagraphs(
+            batch.select(col("doc_id"),
+                paragraphSynthText(col("doc_id"), col("text")).as("text"))
+              .join(admitted, Seq("doc_id"), "left_semi"),
+            paraHashes, "doc_id", "text")
+          .collect().map(strippedRow))
+      }
+      strippedFrame(s, buf.synchronized(buf.toSeq)).orderBy("doc_id")
     } finally {
       cN.unpersist()
       cIdx.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -2077,8 +1535,9 @@ object StreamingGate {
           "n_tok", "first_tok")
         .orderBy("tokens_before", "doc_id", "block"))
 
-  /** Shared core of the two emission loops: the staged epoch stream,
-    * the persisted-tokenizer encode + within-batch seeded order +
+  /** Shared core of the two emission loops: the staged epoch stream
+    * (`nSlices` doc_id-keyed slices, each sorted by id), the
+    * persisted-tokenizer encode + within-batch seeded order +
     * sink-offset running sum (the `packed` frame: id, toks,
     * order_key, n_tok, tokens_before), with `shape` mapping it to the
     * epoch's sink rows, `endExpr` the absolute-end expression the O(1)
@@ -2100,64 +1559,42 @@ object StreamingGate {
       finalShape: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.ext.{TextAnalysis, TrainingData}
-    val stage = newStage()
-    val sinkDir = stage.resolve("sink").toString
-    val sink = graft.io.EpochParquetSink(sinkDir)
     val d = Tables(s, dir, "documents")
-    val idxDir = graft.io.IndexStore.ensureBpeMerges(d, dir, "text",
-      merges = 20)
-    val merges = graft.io.IndexStore.readBpeMerges(s, idxDir)
-    try withStatePartitions(s, 4) {
-      val baseMs = System.currentTimeMillis() - 3600000L
-      (0 until nSlices).foreach { k =>
-        writeSlice(
-          d.filter(pmod(col("doc_id"), lit(nSlices)) === k)
-            .select("doc_id", "text").orderBy("doc_id"),
-          stage, k, baseMs)
-      }
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!sink.committed(batchId)) {
-            val offset = sink.committedEpochs.toSet
-              .intersect(sink.dataEpochs.toSet)
-              .filter(_ < batchId)
-              .maxOption
-              .map { k =>
-                s.read.parquet(s"$sinkDir/batch_id=$k")
-                  .agg(max(endExpr)).head().getLong(0)
-              }
-              .getOrElse(0L)
-            val enc = TextAnalysis.bpeEncode(batch, "text", merges)
-              .select(col("doc_id").as("id"),
-                slice(col("subwords"), 1, 256).as("toks"))
-              .withColumn("order_key",
-                TrainingData.trainingOrderKey(Seq(col("id")), "42"))
-              .withColumn("n_tok", size(col("toks")))
-            val w = Window.orderBy(col("order_key"), col("id"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            val packed = enc
-              .withColumn("tokens_before", lit(offset) +
-                coalesce(sum(col("n_tok").cast("long")).over(w)
-                  - col("n_tok"), lit(0L)))
-            sink.writeEpoch(shape(packed), batchId)
-          }
-          ()
+    val idxDir = IndexStore.ensureBpeMerges(d, dir, "text", merges = 20)
+    val merges = IndexStore.readBpeMerges(s, idxDir)
+    runGate(s) { stage =>
+      val sinkDir = stage.resolve("sink").toString
+      val sink = graft.io.EpochParquetSink(sinkDir)
+      val stream = stagedStream(s, stage, d.select("doc_id", "text"), "doc_id",
+        n = nSlices)
+      drain(stage, stream) { (batch, batchId) =>
+        if (!sink.committed(batchId)) {
+          val offset = sink.committedEpochs.toSet
+            .intersect(sink.dataEpochs.toSet)
+            .filter(_ < batchId)
+            .maxOption
+            .map { k =>
+              s.read.parquet(s"$sinkDir/batch_id=$k")
+                .agg(max(endExpr)).head().getLong(0)
+            }
+            .getOrElse(0L)
+          val enc = TextAnalysis.bpeEncode(batch, "text", merges)
+            .select(col("doc_id").as("id"),
+              slice(col("subwords"), 1, 256).as("toks"))
+            .withColumn("order_key",
+              TrainingData.trainingOrderKey(Seq(col("id")), "42"))
+            .withColumn("n_tok", size(col("toks")))
+          val w = Window.orderBy(col("order_key"), col("id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+          val packed = enc
+            .withColumn("tokens_before", lit(offset) +
+              coalesce(sum(col("n_tok").cast("long")).over(w)
+                - col("n_tok"), lit(0L)))
+          sink.writeEpoch(shape(packed), batchId)
         }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+      }
       finalShape(s.read.parquet(sinkDir))
         .localCheckpoint() // materialize before the stage dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -2178,8 +1615,6 @@ object StreamingGate {
     */
   def streamAnnMaintenanceFromFiles(s: SparkSession, dir: String): DataFrame = {
     import graft.ext.Similarity
-    val stage = newStage()
-    val storeDir = stage.resolve("store").toString
     val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
     // offline-trained quantizer: the day-0 artifact every batch
     // (including batch 0) encodes against
@@ -2190,47 +1625,29 @@ object StreamingGate {
     // writeAnnIndexes one-pick rule, applied to this gate's offline
     // training step)
     val cb = Similarity.pqCodebooksFromPicks(cents, 4, 16, 64)
-    try withStatePartitions(s, 4) {
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(e, "vec_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId == 0L)
-            graft.io.IndexStore.writeAnnIndexes(batch, storeDir,
-              centroids = Some(cents), codebooks = Some(cb))
-          else
-            graft.io.IndexStore.appendAnnIndexes(batch, storeDir)
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+    runGate(s) { stage =>
+      val storeDir = stage.resolve("store").toString
+      drain(stage, stagedStream(s, stage, e, "vec_id")) { (batch, batchId) =>
+        if (batchId == 0L)
+          IndexStore.writeAnnIndexes(batch, storeDir,
+            centroids = Some(cents), codebooks = Some(cb))
+        else
+          IndexStore.appendAnnIndexes(batch, storeDir)
+      }
       // the maintenance slot: act on exactly what the planner says is
       // due (the per-append small files), never unconditionally
-      val due = graft.io.IndexStore.maintenanceDue(s, storeDir,
-          filesPerCellBar = 1.0)
+      val due = IndexStore.maintenanceDue(s, storeDir, filesPerCellBar = 1.0)
         .filter(col("action") === "compact" && col("due"))
         .count()
       require(due >= 1, "streamAnnMaintenance: appends must earn compaction")
-      graft.io.IndexStore.compactAnnIndexes(s, storeDir)
+      IndexStore.compactAnnIndexes(s, storeDir)
 
       Similarity.ivfTopKFromIndex(
-          graft.io.IndexStore.readIvfAssigned(s, storeDir),
-          graft.io.IndexStore.readAnnCentroids(s, storeDir),
+          IndexStore.readIvfAssigned(s, storeDir),
+          IndexStore.readAnnCentroids(s, storeDir),
           e.filter(col("vec_id") < 10), k = 5, nProbe = 2)
         .orderBy("query_id", "rank")
         .localCheckpoint() // materialize before the stage dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -2261,8 +1678,6 @@ object StreamingGate {
     */
   def streamAnnRetrainFromFiles(s: SparkSession, dir: String): DataFrame = {
     import graft.ext.{Similarity, TrainingData}
-    val stage = newStage()
-    val storeDir = stage.resolve("store").toString
     val bucket = TrainingData.splitBucket(col("vec_id"), 1000)
     val shifted = transform(col("embedding"),
       x => (x.cast("double") + lit(3.0)).cast("float"))
@@ -2272,51 +1687,33 @@ object StreamingGate {
           .as("embedding"))
     val seen = corpus.filter(bucket < 800)
     val fresh = corpus.filter(bucket >= 800)
-    try withStatePartitions(s, 4) {
+    runGate(s) { stage =>
+      val storeDir = stage.resolve("store").toString
       // day-0 build: quantizer trained on `seen` only — the stale
       // state a drifted ingest leaves behind
-      graft.io.IndexStore.writeAnnIndexes(seen, storeDir)
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "vec_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.io.IndexStore.appendAnnIndexes(batch, storeDir)
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+      IndexStore.writeAnnIndexes(seen, storeDir)
+      drain(stage, stagedStream(s, stage, fresh, "vec_id")) { (batch, _) =>
+        IndexStore.appendAnnIndexes(batch, storeDir)
+      }
       // the maintenance slot: the PSI monitor must CALL for the
       // retrain (the drifted slice against the stale quantizer's
       // occupancy), and only then does the executor run — over the
       // corpus SOURCE, never the store's own tables
-      val due = graft.io.IndexStore.maintenanceDue(s, storeDir,
-          freshVectors = Some(fresh))
+      val due = IndexStore.maintenanceDue(s, storeDir, freshVectors = Some(fresh))
         .filter(col("action") === "retrain_quantizer" && col("due"))
         .count()
       require(due == 1L,
         "streamAnnRetrain: the drifted slice must trip the PSI signal " +
           "(an empty or in-distribution fresh slice reads PSI ~0 and " +
           "correctly does NOT earn a retrain)")
-      graft.io.IndexStore.retrainAnnIndexes(corpus, storeDir)
+      IndexStore.retrainAnnIndexes(corpus, storeDir)
 
       Similarity.ivfTopKFromIndex(
-          graft.io.IndexStore.readIvfAssigned(s, storeDir),
-          graft.io.IndexStore.readAnnCentroids(s, storeDir),
+          IndexStore.readIvfAssigned(s, storeDir),
+          IndexStore.readAnnCentroids(s, storeDir),
           corpus.filter(col("vec_id") < 10), k = 5, nProbe = 2)
         .orderBy("query_id", "rank")
         .localCheckpoint() // materialize before the stage dir is deleted
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -2332,43 +1729,16 @@ object StreamingGate {
     * oracle.
     */
   def streamDriftFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import graft.ext.{Drift, TrainingData}
-    val stage = newStage()
-    val d = Tables(s, dir, "documents")
-    val bucket = TrainingData.splitBucket(col("doc_id"), 1000)
-    val refHist = Drift.histogram(
-      d.filter(bucket < 500), "n_chars", width = 64, nBuckets = 16, "cnt_ref")
-    try withStatePartitions(s, 4) {
-      val fresh = d.filter(bucket >= 500 && bucket < 600)
-        .select("doc_id", "n_chars")
-      val baseMs = System.currentTimeMillis() - 3600000L
-      writeModSlices(fresh, "doc_id", stage, baseMs)
-      val stream = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("n_chars", LongType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.resolve("data").toString)
-      val last = scala.collection.mutable.HashMap.empty[Int, Long]
-      val query = Streaming.runningHistogram(stream, "n_chars",
-          width = 64, nBuckets = 16)
-        .writeStream
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rows = batch.collect().map(r => (r.getInt(0), r.getLong(1)))
-          last.synchronized { rows.foreach { case (b, c) => last(b) = c }; checkDriverBudget(last.size) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
-      import s.implicits._
-      val curHist = last.synchronized { last.toSeq }
-        .toDF("bucket", "cnt_cur")
+    import graft.ext.Drift
+    val (seen, fresh) = seenFresh(Tables(s, dir, "documents"))
+    val refHist = Drift.histogram(seen, "n_chars", width = 64, nBuckets = 16,
+      "cnt_ref")
+    runGate(s) { stage =>
+      val stream = stagedStream(s, stage, fresh.select("doc_id", "n_chars"),
+        "doc_id")
+      val curHist = latestByKey(stage, Streaming.runningHistogram(stream,
+        "n_chars", width = 64, nBuckets = 16), "bucket")
       Drift.psiFromHistograms(refHist, curHist).orderBy("bucket")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
   }
 
@@ -2382,36 +1752,19 @@ object StreamingGate {
     * batch a key appears in, so the final upsert is complete once all
     * files are processed.
     */
-  def runningActivenessFromFiles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ckpt = newStage()
-    try withStatePartitions(s, 4) {
+  def runningActivenessFromFiles(s: SparkSession, dir: String): DataFrame =
+    runGate(s) { stage =>
+      import s.implicits._
       val stream = sharedStream(s, dir)
         .select("contract", "category", "duration", "ts")
-      val last = scala.collection.mutable.HashMap.empty[String, Streaming.ActivenessUpdate]
-      val query = Streaming.runningActiveness(stream.as[Streaming.ViewEvent])
-        .writeStream
-        .option("checkpointLocation", ckpt.resolve("ckpt").toString)
-        .outputMode("update")
-        .foreachBatch { (batch: Dataset[Streaming.ActivenessUpdate], _: Long) =>
-          // foreachBatch runs epochs sequentially, so last write wins
-          // in batch order — the serving-table upsert semantic
-          val rows = batch.collect()
-          last.synchronized { rows.foreach(u => last(u.contract) = u); checkDriverBudget(last.size) }
-          ()
-        }
-        .start()
-      query.processAllAvailable()
-      query.stop()
-
+      val last = latestByKey(stage,
+        Streaming.runningActiveness(stream.as[Streaming.ViewEvent]).toDF(),
+        "contract")
       // shared sentinel rows create a __sentinel__ contract key in
       // state — not a real user; drop it before the long cast
-      last.synchronized { (last - Sentinel).values.toSeq }.toDS().toDF()
+      dropSentinel(last, "contract")
         .select(col("contract").cast("long").as("user_id"),
           col("daysActive").as("days_active"), col("activeness"))
         .orderBy("user_id")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
 }

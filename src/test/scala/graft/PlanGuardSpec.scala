@@ -388,4 +388,12 @@ class PlanGuardSpec extends SparkSpec {
     }
     withClue(leakers.mkString("\n")) { leakers shouldBe empty }
   }
+
+  test("StreamingGate starts every gate's query through its one runner") {
+    // a gate that hand-copies its own drain adds a second query start
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
+      .get("src/main/scala/graft/streaming/StreamingGate.scala")), "UTF-8")
+    "\\.writeStream\\b".r.findAllIn(src).size shouldBe 1
+    "processAllAvailable\\(".r.findAllIn(src).size shouldBe 1
+  }
 }

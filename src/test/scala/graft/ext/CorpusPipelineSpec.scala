@@ -77,9 +77,9 @@ class CorpusPipelineSpec extends SparkSpec {
     // graph is hub—leaf edges only. Min-id keeps leaf 1 (the cluster
     // label); rank must keep the hub. Every 3-gram contains a
     // block-tagged word, so blocks share no shingles. Tags picked by
-    // DevStar: banding at J≈0.65 catches ~80% of edges per hash
-    // family, so the family is chosen to land all three star edges
-    // (deterministic thereafter).
+    // a search over candidate tag families: banding at J≈0.65 catches
+    // ~80% of edges per hash family, so the family is chosen to land
+    // all three star edges (deterministic thereafter).
     def block(tag: String): String =
       (1 to 10).map(j => s"the $tag$j of").mkString(" ")
     val (a, b, c) = (block("delta"), block("epsilon"), block("zeta"))

@@ -1285,13 +1285,18 @@ class IndexStoreSpec extends SparkSpec {
       .limit(1).select(lit(900000002L).as("doc_id"), col("text")))
       .localCheckpoint() // its source scan stays out of the plans
     IndexStore.admitFromIndexes(probe, spark, dir) // loads the weights
-    val plan = executed(IndexStore.admitFromIndexes(probe, spark, dir))
-    plan.collect { case s: FileSourceScanExec => table(s) }.toSet shouldBe Set(
-      IndexStore.DigestsTable, IndexStore.SpanHashesTable,
-      IndexStore.BandIndexTable, IndexStore.ShingleSetsTable)
-    plan.collect { case b: BroadcastExchangeExec => b } should not be empty
-    storeBuilds(plan) shouldBe empty
-    shuffles(plan) shouldBe empty
+    // the admission and the store-side ladder it runs the model rung
+    // over (which the streaming full-ladder gate shares)
+    for (plan <- Seq(executed(IndexStore.admitFromIndexes(probe, spark, dir)),
+        executed(IndexStore.novelFromIndexes(probe, spark, dir, "doc_id",
+          "text", 8, 0.5, graft.ext.HashDefs.CrossBroadcastMaxBytes)))) {
+      plan.collect { case s: FileSourceScanExec => table(s) }.toSet shouldBe Set(
+        IndexStore.DigestsTable, IndexStore.SpanHashesTable,
+        IndexStore.BandIndexTable, IndexStore.ShingleSetsTable)
+      plan.collect { case b: BroadcastExchangeExec => b } should not be empty
+      storeBuilds(plan) shouldBe empty
+      shuffles(plan) shouldBe empty
+    }
     // control: the store-side composition builds from store scans and
     // shuffles its hit ids to distinct them
     val replay = executed(ladderReplay(probe, dir))

@@ -574,4 +574,41 @@ class StreamingGateSpec extends SparkSpec {
         Array("_committed_0", "_committed_1", "_committed_2")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
+
+  test("gate runner: a failing onBatch surfaces its error; the query, " +
+      "the stage dir and the shuffle-partition setting are cleaned up") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "3") // not the runner's 4, so a restore shows
+    try {
+      var stage: java.nio.file.Path = null
+      var inside = ""
+      val err = intercept[Exception] {
+        StreamingGate.runGate(spark) { st =>
+          stage = st
+          inside = spark.conf.get(key)
+          val stream = StreamingGate.stagedStream(spark, st,
+            spark.range(6).toDF("id"), "id")
+          StreamingGate.drain(st, stream) { (_, _) =>
+            throw new IllegalStateException("onBatch failed on purpose")
+          }
+        }
+      }
+      Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(
+          _.contains("onBatch failed on purpose"))) shouldBe true
+      inside shouldBe "4"
+      spark.streams.active shouldBe empty
+      java.nio.file.Files.exists(stage) shouldBe false
+      spark.conf.get(key) shouldBe "3"
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("driver budget: MaxDriverBufferRows rows pass, one more fails " +
+      "naming the sinked wiring") {
+    StreamingGate.checkDriverBudget(StreamingGate.MaxDriverBufferRows)
+    val e = intercept[IllegalStateException](
+      StreamingGate.checkDriverBudget(StreamingGate.MaxDriverBufferRows + 1))
+    e.getMessage should include("parquet-sinked gate wiring")
+  }
 }
