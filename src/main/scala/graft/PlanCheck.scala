@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: dump `explain("formatted")` for selected queries so plan
   * regressions (lost pushdown, surprise shuffles, broadcast-turned-
   * sort-merge, codegen gaps) are visible. `runMain graft.PlanCheck
@@ -17,12 +15,9 @@ object PlanCheck {
         "q_ann_ivf", "q_trending_fused", "q_dedup_clusters", "q_containment",
         "q_dedup_incremental", "q_embed_neardup_lsh", "q_tfidf",
         "q_heavy_hitters", "q_pack")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the engine's own session profile, so the printed plans are the
+    // ones the engine runs (broadcast threshold, bucketed-scan ordering)
+    val spark = GraftSession.local(8, "graft-plancheck")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

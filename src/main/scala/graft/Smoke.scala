@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke runner for the flagship entry — mirrors the driver's t1 check
   * (SparkEntry.entry on sf0.001, rows > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, "graft-smoke")
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -1,18 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  * `Verify <sfDir> <outDir> [query…]`: with no query names every
+  * registry face is dumped; with names only those faces and their
+  * oracle SQL, in the same dump shape. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query…]")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSet
+    val chosen: String => Boolean = n => names.isEmpty || names(n)
+    names.filterNot(SparkEntry.queries.contains).foreach(n =>
+      System.err.println(s"[verify] unknown query: $n"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the engine's documented tuning profile (GraftSession), so what the
     // oracle verifies is the same configuration the bench measures
     val spark = GraftSession.local(cpus.toInt, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => chosen(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -31,7 +38,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => chosen(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -558,12 +558,13 @@ object Dedup {
     // final SortAggregate; the r18 ArgMax lesson). For numeric ranks
     // over bigint ids the pick is the flat-buffer
     // [[graft.functions.ArgMaxScoreMinId]] instead: same (max rank,
-    // ties → min id) winner — null ranks map to -Infinity so they lose
-    // to any ranked member and an all-null cluster still keeps its min
-    // id — on the codegen'd map-side-combining hash path. Long ranks
-    // fail LOUD past 2^53 (where the double cast stops being
-    // order-preserving). Other ids (int, string) or non-numeric ranks
-    // take the rank-1 window, which orders any type.
+    // ties → min id) winner — null ranks never win (not even against a
+    // -Infinity rank, as in the window) and an all-null cluster keeps
+    // the min id computed in the same groupBy — on the codegen'd
+    // map-side-combining hash path. Long ranks fail LOUD past 2^53
+    // (where the double cast stops being order-preserving). Other ids
+    // (int, string) or non-numeric ranks take the rank-1 window, which
+    // orders any type.
     val numericRank = joined.schema("__rank").dataType match {
       case ByteType | ShortType | IntegerType | FloatType | DoubleType |
           LongType => true
@@ -581,9 +582,9 @@ object Dedup {
           case _ => col("__rank").cast("double")
         }
         joined.groupBy("cluster")
-          .agg(graft.functions.ArgMaxFunctions.argmax_min_id(
-            coalesce(cast, lit(Double.NegativeInfinity)), col("id")).as("w"))
-          .select(col("w.id").as(idCol))
+          .agg(graft.functions.ArgMaxFunctions.argmax_min_id(cast, col("id"))
+            .as("w"), min(col("id")).as("min_id"))
+          .select(coalesce(col("w.id"), col("min_id")).as(idCol))
       } else graft.functions.ArgMaxFunctions
         .rankOneRows(joined, "cluster", "__rank", "id")
         .select(col("id").as(idCol))
@@ -959,7 +960,7 @@ object Dedup {
     * as `jaccard` (and their intersection size as `shared`) — the one
     * verify rule every MinHash candidate path applies.
     */
-  private[ext] def withSetJaccard(df: DataFrame, a: String, b: String): DataFrame =
+  private[graft] def withSetJaccard(df: DataFrame, a: String, b: String): DataFrame =
     df.withColumn("shared", size(array_intersect(col(a), col(b))))
       .withColumn("jaccard", col("shared").cast("double") /
         (size(col(a)) + size(col(b)) - col("shared")).cast("double"))

@@ -41,8 +41,8 @@ import org.apache.spark.sql.types._
   * The buffer is a k-slot object array (TypedImperativeAggregate →
   * ObjectHashAggregate): not whole-stage-codegen'd, but map-side
   * combinable and O(k) per row with k in the single digits for every
-  * caller; `k <= 4096` is enforced so a misconfigured caller cannot
-  * turn the buffer into a per-group sort. Payloads must be
+  * caller; `k <= [[TopKFunctions.MaxK]]` is enforced so a
+  * misconfigured caller cannot turn the buffer into a per-group sort. Payloads must be
   * fixed-width types (the [[ArgMaxScoreMinId]] rule) so the buffer
   * serialization stays a flat byte walk.
   */
@@ -52,8 +52,8 @@ case class TopKScoreMinId(
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[TopKBuffer] {
 
-  require(k >= 1 && k <= 4096,
-    s"topk_score_min_id: k must be in [1, 4096], got $k")
+  require(k >= 1 && k <= TopKFunctions.MaxK,
+    s"topk_score_min_id: k must be in [1, ${TopKFunctions.MaxK}], got $k")
 
   override def children: Seq[Expression] = score +: id +: payloads
   override def nullable: Boolean = false
@@ -285,6 +285,13 @@ object TopKBuffer {
 }
 
 object TopKFunctions {
+
+  /** Largest k the bounded aggregate serves — past it (a caller
+    * ranking "everything"), the k-slot buffer would degenerate toward
+    * a per-group sort, so callers rank with the `row_number` window
+    * instead.
+    */
+  val MaxK = 4096
 
   /** Per group: the k best (score, id, payloads...) rows under
     * (score DESC NULLS LAST, id ASC NULLS FIRST), as an

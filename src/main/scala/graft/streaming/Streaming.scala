@@ -144,7 +144,8 @@ object Streaming {
     *    fresh doc ever meets are same-bucket ones;
     *  - a second stream-static join pulls the candidate's shingle set
     *    from `corpusSets` and the exact Jaccard verify
-    *    (`array_intersect`, row-local) keeps pairs ≥ `minJaccard`.
+    *    ([[graft.ext.Dedup.withSetJaccard]], row-local) keeps pairs ≥
+    *    `minJaccard`.
     *
     * Fully stateless (no watermark, no state store): a document's
     * verdict completes within its own micro-batch because the static
@@ -172,17 +173,14 @@ object Streaming {
       .withColumn("__hs", shingle_hashes(col(textCol), ShingleN))
       .filter(size(col("__hs")) > 0)
       .withColumn("__sig", minhash_signature(col("__hs")))
-    withSets
+    graft.ext.Dedup.withSetJaccard(withSets
       .select(col(idCol).as("new_id"), col("__hs"),
         explode(graft.ext.Dedup.bandArray(col("__sig"))).as("__b"))
       .select(col("new_id"), col("__hs"),
         col("__b.band").as("band"), col("__b.band_hash").as("band_hash"))
       .join(bandIndex, Seq("band", "band_hash"))
       .filter(col("corpus_id") =!= col("new_id"))
-      .join(corpusSets, Seq("corpus_id"))
-      .withColumn("__shared", size(array_intersect(col("__hs"), col("corpus_hs"))))
-      .withColumn("jaccard", col("__shared").cast("double") /
-        (size(col("__hs")) + size(col("corpus_hs")) - col("__shared")).cast("double"))
+      .join(corpusSets, Seq("corpus_id")), "__hs", "corpus_hs")
       .filter(col("jaccard") >= minJaccard)
       .select("new_id", "corpus_id", "jaccard")
   }

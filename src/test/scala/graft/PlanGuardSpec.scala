@@ -396,4 +396,18 @@ class PlanGuardSpec extends SparkSpec {
     "\\.writeStream\\b".r.findAllIn(src).size shouldBe 1
     "processAllAvailable\\(".r.findAllIn(src).size shouldBe 1
   }
+
+  test("every top-k face ranks through Similarity's one topK helper") {
+    // a face that calls the aggregate directly loses the window
+    // fallback past TopKFunctions.MaxK
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val sites = files.flatMap { p =>
+      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      "(?<!def )\\btopk_score_min_id\\(".r.findAllIn(src).map(_ => p.toString)
+    }
+    sites shouldBe Seq("src/main/scala/graft/ext/Similarity.scala")
+  }
 }

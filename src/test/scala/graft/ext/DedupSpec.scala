@@ -762,14 +762,24 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "n_chars")
     val clusters = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (5L, 5L),
       (6L, 5L), (7L, 7L), (8L, 7L)).toDF("id", "cluster")
+    // a double rank: a null rank loses even to −Infinity (no sentinel
+    // may let the lower null-rank id win the tie)
+    val infDocs = Seq[(Long, Option[Double])](
+      (9L, None), (10L, Some(Double.NegativeInfinity))).toDF("doc_id", "score")
+    val infClusters = Seq((9L, 9L), (10L, 9L)).toDF("id", "cluster")
     for (t <- Seq("bigint", "int", "string")) withClue(t) {
       def typed(df: org.apache.spark.sql.DataFrame, c: String) =
         df.withColumn(c, col(c).cast(t))
-      val kept = Dedup.clusterSurvivors(typed(docs, "doc_id"), "doc_id",
-        typed(clusters, "id"), "n_chars")
-      kept.schema("doc_id").dataType.catalogString shouldBe t
-      kept.select(col("doc_id").cast("long")).collect().map(_.getLong(0))
-        .sorted.toSeq shouldBe Seq(2L, 3L, 6L, 7L)
+      def survivors(d: org.apache.spark.sql.DataFrame,
+          c: org.apache.spark.sql.DataFrame, rank: String) = {
+        val kept = Dedup.clusterSurvivors(typed(d, "doc_id"), "doc_id",
+          typed(c, "id"), rank)
+        kept.schema("doc_id").dataType.catalogString shouldBe t
+        kept.select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+          .sorted.toSeq
+      }
+      survivors(docs, clusters, "n_chars") shouldBe Seq(2L, 3L, 6L, 7L)
+      survivors(infDocs, infClusters, "score") shouldBe Seq(10L)
     }
   }
 

@@ -580,6 +580,47 @@ class SimilaritySpec extends SparkSpec {
     restricted.values.sum should be < full.values.sum // strictly prunes
   }
 
+  test("PQ, IVF-PQ and bitext faces rank past the aggregate cap: k or " +
+      "rerank = MaxK + 1 returns the rows MaxK does") {
+    import graft.functions.IvfFunctions.ivf_cells
+    import graft.functions.TopKFunctions.MaxK
+    import org.apache.spark.sql.DataFrame
+    // every key has fewer than MaxK candidates, so the window fallback
+    // keeps exactly the rows the aggregate keeps
+    val (corpus, queries) = planted
+    val cents = Similarity.ivfCentroids(corpus, nCells = 16)
+    val cb = Similarity.pqCodebooks(corpus, m = 4, ks = 16, dim = 64)
+    val assigned = Similarity.withNorm(
+        corpus.select(col("vec_id").as("id"), col("embedding").as("vec")))
+      .withColumn("cell", element_at(ivf_cells(col("vec"), cents, 1), 1))
+    val codes = assigned.select(col("id"), col("cell"),
+      Similarity.pqEncode(Similarity.normalizedGuarded(col("vec")), cb)
+        .as("codes"))
+    val src = corpus.filter(col("vec_id") % 2 === 0)
+    val tgt = corpus.filter(col("vec_id") % 2 === 1)
+    val faces = Seq[(String, Int => DataFrame)](
+      "pqTopK" -> (Similarity.pqTopK(corpus, queries, _)),
+      "pqTopK rerank" -> (r => Similarity.pqTopK(corpus, queries, 3, rerank = r)),
+      "ivfPqTopK" -> (Similarity.ivfPqTopK(corpus, queries, _)),
+      "ivfPqTopK rerank" ->
+        (r => Similarity.ivfPqTopK(corpus, queries, 3, rerank = r)),
+      "ivfPqTopKFromIndex" ->
+        (Similarity.ivfPqTopKFromIndex(codes, cents, cb, queries, _)),
+      "ivfPqRerankFromIndex" -> (r => Similarity.ivfPqRerankFromIndex(
+        codes, assigned, cents, cb, queries, 3, rerank = r)),
+      "mineBitext" -> (Similarity.mineBitext(src, tgt, _)),
+      "mineBitextFromIndex" -> (k => Similarity.mineBitextFromIndex(
+        assigned.filter(col("id") % 2 === 0),
+        assigned.filter(col("id") % 2 === 1), cents, src, tgt, k)))
+    faces.foreach { case (name, face) =>
+      withClue(s"$name: ") {
+        val atCap = rowSet(face(MaxK))
+        atCap should not be empty
+        rowSet(face(MaxK + 1)) shouldBe atCap
+      }
+    }
+  }
+
   test("semDedupSurvivors: drop rule honors its definition — clumps keep " +
       "their centroid-farthest member, isolated docs always survive") {
     import org.apache.spark.sql.functions._

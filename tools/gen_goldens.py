@@ -11,7 +11,7 @@ the Spark schema, which the driver's rows/schema/hash gate then
 enforces every round — the same tamper-evidence as a computed oracle.
 
 Usage:
-    sbt 'runMain graft.VerifySome /root/testdata/sf0.01 /tmp/golden \
+    sbt 'runMain graft.Verify /root/testdata/sf0.01 /tmp/golden \
         q_bpe_train q_bpe_encode q_ann_ivf_trained'
     python3 tools/gen_goldens.py /tmp/golden
 
@@ -96,7 +96,7 @@ def main(dump_dir):
     for dump, resources, cols in SPECS:
         files = glob.glob(f"{dump_dir}/{dump}/*.parquet")
         assert files, f"no dump for {dump} under {dump_dir}"
-        # Verify/VerifySome coalesce(1) their dumps; a multi-file dump
+        # Verify coalesce(1)s its dumps; a multi-file dump
         # would silently truncate the golden — fail loud instead
         assert len(files) == 1, \
             f"{dump}: expected one part file, got {len(files)} — " \
