@@ -179,10 +179,13 @@ object CorpusPipeline {
           // inverted file restricted to the text-stage survivors by
           // one left-semi on id, deduped within the STORE's cells
           // via [[Similarity.semDedupFromIndex]] — the run pays
-          // neither the centroid pick nor the encode pass (the
-          // 2.7-5.8× A/B measured on the standalone faces carries
-          // over; SCALE.md §"prepare's semantic stage from the
-          // store"). Deliberate semantic distinction from the
+          // neither the centroid pick nor the cell assignment. Both
+          // faces score the centroid-cosine the same way, so that is
+          // all it saves, and it is not a speed claim: at √n cells
+          // the standalone served face measured slower than in-plan
+          // (3.4-8.9 s vs 1.8-3.9 s warm at 20k vectors on a 4-core
+          // VM, SCALE.md §"SemDeDup from the persisted store").
+          // Deliberate semantic distinction from the
           // in-plan face, documented on [[prepare]]: cells come from
           // the CORPUS-trained quantizer (the one every other store
           // consumer shares), not from a survivor-restricted re-pick
@@ -265,7 +268,7 @@ object CorpusPipeline {
     * ([[graft.io.IndexStore.readIvfAssigned]] /
     * `readAnnCentroids`), restricted to the text-stage survivors by
     * one left-semi — the nightly e2e run then pays neither the
-    * centroid pick nor the per-row encode pass the in-plan stage
+    * centroid pick nor the per-row cell assignment the in-plan stage
     * re-pays per run. Semantics note (deliberate, spec-pinned both
     * ways): the in-plan stage picks centroids FROM the survivor set,
     * the store stage dedups within the CORPUS-trained quantizer's

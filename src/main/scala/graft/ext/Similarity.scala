@@ -403,9 +403,10 @@ object Similarity {
     * survive. Returns (id, cell, centroid_cos).
     *
     * Scale shape: assignment is the row-local codegen'd
-    * [[graft.functions.IvfCells]] pass; the only join is the
-    * within-cell self-join, quadratic in CELL occupancy, not corpus
-    * size — `nCells = 0` (the default) sizes cells with
+    * [[graft.functions.IvfCells]] pass and the centroid-cosine one
+    * dot per row against the broadcast centroids
+    * ([[withCentroidCos]]); the only shuffle join is the within-cell
+    * self-join, quadratic in CELL occupancy, not corpus size — `nCells = 0` (the default) sizes cells with
     * [[ivfCellsFor]] from one cheap `count()` so the per-cell work
     * stays bounded as the corpus grows (the lshNearDupPairs occupancy
     * discipline); pass an explicit cell count to pin a layout (the
@@ -419,56 +420,66 @@ object Similarity {
     import graft.functions.IvfFunctions.ivf_cells
     val cells = if (nCells > 0) nCells else ivfCellsFor(corpus.count())
     val cents = ivfCentroids(corpus, cells, idCol, vecCol)
-    // centroid-cosine via the same index-order double dot the cell
-    // assignment uses (centroids are unit vectors), so the SQL twin
-    // replays both bit-for-bit
-    val dots = array(cents.map(c => dot(col("vec"), typedLit(c))): _*)
-    val c = corpusSide(corpus, idCol, vecCol)
+    val assigned = corpusSide(corpus, idCol, vecCol)
       .withColumn("cell", element_at(ivf_cells(col("vec"), cents, 1), 1))
-      .withColumn("ccos",
-        when(col("norm") =!= 0.0, element_at(dots, col("cell") + 1) / col("norm")))
-    semDedupTail(c.select("id", "cell", "vec", "norm", "ccos"), tau)
+    semDedupTail(withCentroidCos(assigned, cents), tau)
   }
 
   /** [[semDedupSurvivors]] served from the PERSISTED ANN store — the
     * build-once/serve-many shape for the paper's operator: `assigned`
     * is the stored (id, cell, vec, norm) inverted file
     * ([[graft.io.IndexStore.readIvfAssigned]]) and `cents` the stored
-    * quantizer, so the run pays NEITHER the centroid pick (a corpus
-    * orderBy-limit-collect) nor the nCells-dots-per-row encode pass —
-    * the two costs the in-plan face re-pays per run and the store
-    * exists to amortize. The centroid-cosine needs only the row's OWN
-    * cell's centroid: a broadcast equi-join on `cell` against the
-    * nCells-row centroid frame makes it ONE codegen'd dot per row
-    * (vs nCells in the encode pass). Same drop rule, same output,
-    * same oracle as the in-plan face (served ≡ in-plan is
-    * spec-pinned); the within-cell self-join reads the
-    * cell-partitioned file co-grouped by its own layout.
+    * quantizer, so the run pays neither the centroid pick (a corpus
+    * orderBy-limit-collect) nor the [[graft.functions.IvfCells]]
+    * assignment pass that the in-plan face re-pays per run. Everything
+    * else is shared: the centroid-cosine ([[withCentroidCos]], one dot
+    * per row) and the drop rule, so the output and the oracle are the
+    * in-plan face's (served ≡ in-plan is spec-pinned). Measured at
+    * √n cells, warm (SCALE.md §"SemDeDup from the persisted store"):
+    * the saving is small — the assignment with its pick took
+    * 0.6–1.0 s at 20k vectors — and reading the cell-partitioned
+    * store cost more, 3.4–8.9 s here against 1.8–3.9 s in-plan.
     */
   def semDedupFromIndex(assigned: DataFrame, cents: Array[Array[Double]],
-      tau: Double = 0.45): DataFrame = {
+      tau: Double = 0.45): DataFrame =
+    semDedupTail(withCentroidCos(assigned, cents), tau)
+
+  /** The centroid-cosine (`ccos`) both SemDeDup faces score with:
+    * each (id, cell, vec, norm) row against its OWN cell's centroid,
+    * through a broadcast equi-join on `cell` against the nCells-row
+    * centroid frame — ONE codegen'd dot per row, and the centroid
+    * matrix stays out of the plan's literals (a literal per-cell
+    * array puts nCells × dim doubles into every plan). The dot is the
+    * index-order double dot the cell assignment uses (centroids are
+    * unit vectors), so the SQL twin replays it bit-for-bit.
+    *
+    * LEFT join + fail-loud: an inner join would silently DROP every
+    * row whose cell has no centroid — the mixed-artifacts state a
+    * read racing a retrain swap (or hand-mixed store dirs) produces —
+    * and silent row loss is the one failure a dedup stage must never
+    * have. The error is raised per offending row at evaluation,
+    * costing no extra scan on the happy path. A null cell (a null
+    * vector has none) misses no centroid: its `ccos` is null, and the
+    * row survives like a zero-norm one.
+    */
+  private def withCentroidCos(assigned: DataFrame,
+      cents: Array[Array[Double]]): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val centsDf = cents.zipWithIndex.map { case (v, cid) => (cid, v.toSeq) }
       .toSeq.toDF("cell", "cvec")
-    // LEFT join + fail-loud: an inner join would silently DROP every
-    // row whose stored cell has no centroid — the mixed-artifacts
-    // state a read racing a retrain swap (or hand-mixed store dirs)
-    // produces — and silent row loss is the one failure a dedup
-    // stage must never have. The error is raised per offending row
-    // at evaluation, costing no extra scan on the happy path.
-    val c = assigned
+    assigned
       .select(col("id"), col("cell").cast("int").as("cell"),
         col("vec"), col("norm"))
       .join(broadcast(centsDf), Seq("cell"), "left")
       .withColumn("ccos",
-        when(col("cvec").isNull, raise_error(concat(
-          lit("semDedupFromIndex: stored cell "), col("cell").cast("string"),
-          lit(" has no centroid — the inverted file and quantizer are " +
+        when(col("cell").isNotNull && col("cvec").isNull, raise_error(concat(
+          lit("semDedup: cell "), col("cell").cast("string"),
+          lit(" has no centroid — the cell assignment and quantizer are " +
             "from different builds"))))
         .otherwise(
           when(col("norm") =!= 0.0, dot(col("vec"), col("cvec")) / col("norm"))))
-    semDedupTail(c.select("id", "cell", "vec", "norm", "ccos"), tau)
+      .select("id", "cell", "vec", "norm", "ccos")
   }
 
   /** The clump-collapse tail both SemDeDup faces share: within-cell
@@ -1053,13 +1064,13 @@ object Similarity {
     val codes = codebooks.zipWithIndex.map { case (cb, s) =>
       val subDim = cb(0).length
       val subv = slice(nvec, s * subDim + 1, subDim)
-      val dists = array(cb.map { c =>
+      val dists = array(cb.toIndexedSeq.map { c =>
         val cn = c.map(x => x * x).sum
         lit(cn) - lit(2.0) * dot(subv, typedLit(c))
       }: _*)
       (array_position(dists, array_min(dists)) - 1).cast("int")
     }
-    array(codes: _*)
+    array(codes.toIndexedSeq: _*)
   }
 
   /** Product-quantization approximate top-k — the third classic ANN
@@ -1206,7 +1217,7 @@ object Similarity {
     queries
       .select(col(idCol).as("query_id"), normalizedGuarded(col(vecCol)).as("qnv"))
       .select(col("query_id"), array(cb.indices.map { s =>
-        array(cb(s).map(c =>
+        array(cb(s).toIndexedSeq.map(c =>
           dot(slice(col("qnv"), s * subDim + 1, subDim), typedLit(c))): _*)
       }: _*).as("lut"))
   }
@@ -1228,11 +1239,12 @@ object Similarity {
     ranked.select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
       round(col("approx"), 6).as("approx_cos"))
 
-  /** The exact-cosine rerank every retrieve-then-rerank face ends
-    * with: join the ranked candidates to the full-precision `vecs`
-    * (…, vec, norm) on `keys`, score exact cosine against the
-    * broadcast query side, and [[rankTopK]] the top `k`. `cands` is
-    * by-name so a depth below `k` fails before its plan is built.
+  /** The exact-cosine rerank every retrieve-then-rerank face (and
+    * [[lshTopK]]'s candidate set) ends with: join the candidates to
+    * the full-precision `vecs` (…, vec, norm) on `keys`, score exact
+    * cosine against the broadcast query side, and [[rankTopK]] the
+    * top `k`. `cands` is by-name so a depth below `k` fails before
+    * its plan is built.
     */
   private def exactRerank(cands: => DataFrame, vecs: DataFrame,
       keys: Seq[String], queries: DataFrame, k: Int, rerank: Int,
@@ -1266,7 +1278,7 @@ object Similarity {
     *
     * Scale shape: the corpus shuffles once on (table, bucket) — an
     * equi-join, never a cross join — and the candidate set, not the
-    * corpus, feeds [[rankTopK]].
+    * corpus, feeds the exact rescore ([[exactRerank]] at depth k).
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nPlanes: Int = 6, nTables: Int = 8, multiProbe: Boolean = true,
@@ -1296,11 +1308,6 @@ object Similarity {
       .filter(col("id") =!= col("query_id"))
       .select("query_id", "id")
       .distinct() // a pair colliding in several tables scores once
-    val scored = candidates
-      .join(c, Seq("id"))
-      .join(broadcast(querySide(queries, idCol, vecCol)), Seq("query_id"))
-      .withColumn("cos",
-        cosineFromNorms(col("qvec"), col("vec"), col("qnorm"), col("norm")))
-    rankTopK(scored, k)
+    exactRerank(candidates, c, Seq("id"), queries, k, k, idCol, vecCol)
   }
 }

@@ -848,7 +848,7 @@ object IndexStore {
         // rename the rewritten one in — a cell emptied entirely
         // simply has nothing to rename in
         val tmp = s"$dir/.delete_$t"
-        cur.filter(col("cell").isin(affectedCells: _*))
+        cur.filter(col("cell").isin(affectedCells.toIndexedSeq: _*))
           .join(del, Seq("id"), "left_anti")
           .repartition(col("cell"))
           .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
@@ -1815,7 +1815,7 @@ object IndexStore {
       // full scans at planner cadence): distinct full-row tuples ==
       // count_distinct of the all-columns struct (never null)
       val a = df.agg(count(lit(1)).as("n"),
-        count_distinct(struct(df.columns.map(col): _*)).as("nd")).head()
+        count_distinct(struct(df.columns.toIndexedSeq.map(col): _*)).as("nd")).head()
       val total = a.getLong(0)
       val ratio =
         if (total == 0) 0.0

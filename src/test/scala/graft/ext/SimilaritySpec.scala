@@ -689,6 +689,58 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("semDedupFromIndex: a null embedding survives on both faces with " +
+      "a null cell and centroid-cosine") {
+    import graft.io.IndexStore
+    val base = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+      .select("vec_id", "embedding")
+    val nullId = 1_000_000L
+    val e = base.unionByName(spark.range(1).select(lit(nullId).as("vec_id"),
+      lit(null).cast(base.schema("embedding").dataType).as("embedding")))
+    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
+    try {
+      IndexStore.writeAnnIndexes(e, dir)
+      val served = Similarity.semDedupFromIndex(
+        IndexStore.readIvfAssigned(spark, dir),
+        IndexStore.readAnnCentroids(spark, dir))
+      val inPlan = Similarity.semDedupSurvivors(e, nCells = 16)
+      val inPlanRows = rowSet(inPlan)
+      rowSet(served) shouldBe inPlanRows
+      inPlanRows should contain (Seq(nullId, null, null))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir))
+    }
+  }
+
+  test("semDedupSurvivors: the in-plan face scores the centroid-cosine " +
+      "with the served face's one dot per row, not one per cell") {
+    import graft.io.IndexStore
+    val e = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+      .select("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
+    // the in-plan face also computes each row's norm, which prints as
+    // sqrt(vectordot(v, v)) and which the store holds; beyond it, both
+    // faces pay the same dots: one centroid-cosine and one pair cosine
+    def dots(df: org.apache.spark.sql.DataFrame): Int = {
+      val plan = df.queryExecution.optimizedPlan.toString.toLowerCase
+      def n(s: String) = s.r.findAllMatchIn(plan).size
+      n("vectordot") - n("""sqrt\(vectordot""")
+    }
+    try {
+      IndexStore.writeAnnIndexes(e, dir)
+      val served = Similarity.semDedupFromIndex(
+        IndexStore.readIvfAssigned(spark, dir),
+        IndexStore.readAnnCentroids(spark, dir))
+      val inPlan = Similarity.semDedupSurvivors(e, nCells = 16)
+      dots(served) should be > 0
+      dots(inPlan) shouldBe dots(served)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir))
+    }
+  }
+
   test("prototypePrune: per-cell integer cut drops the most-prototypical " +
       "first, singles and null-cosine rows always survive") {
     val asgn = Seq(
